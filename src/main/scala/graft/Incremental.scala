@@ -207,8 +207,9 @@ object Incremental {
 
     // phash groups + simhash index/pairs
     val fSim = Future {
-      val phNewValSeq = newKeyed.select("phash").collect()
-        .map(_.getLong(0)).distinct.toSeq
+      // a row with a null phash gets no phash/simhash candidates
+      val phNewValSeq = newKeyed.where(col("phash").isNotNull)
+        .select("phash").collect().map(_.getLong(0)).distinct.toSeq
       val phNewVals = phNewValSeq.toDF("phash")
       // ONE corpus pass serves both phash needs (the old shape paid two
       // full clean scans): old members of touched phashes — for the

@@ -510,7 +510,9 @@ object Probe {
 
       // phash groups + simhash bands
       val fSim = Future {
-        val phNew = cleanRows.toSeq.map(r => (r.getString(0), r.getLong(5)))
+        // a row with a null phash gets no phash/simhash candidates
+        val phNew = cleanRows.toSeq.filterNot(_.isNullAt(5))
+          .map(r => (r.getString(0), r.getLong(5)))
         val phNewVals = phNew.map(_._2).distinct
         // one cluster fetch serves both: old members of touched phashes
         // (for prepPh) and the present-in-corpus phash set
@@ -652,31 +654,22 @@ object Probe {
         val involvedReps = relations.flatMap(p => Seq(p._1, p._2)).distinct
         val involvedSet = involvedReps.toSet
         val normCohortRows = (if (involvedReps.isEmpty)
-            Seq.empty[(String, String, String)]
+            Seq.empty[(String, String)]
           else L("normCohort")(
             keyFiltered(idx.normMapAll, "nrep", involvedReps,
               involvedReps.toDF("nrep"))
-              .select("image_id", "norm", "nrep")).collect()
-            .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq) ++
-          normNewRows.filter(t => involvedSet.contains(t._3))
-        // expandSubstringPairs, driver-side: members of the contained
-        // caption ↔ container rep and vice versa (same inner-join
-        // semantics — a relation endpoint without a cohort rep row drops
-        // the relation, exactly as the two rep joins would)
-        val repNorm = normCohortRows.collect {
-          case (id, norm, nrep) if id == nrep => id -> norm
-        }.toMap
-        val membersByNorm = normCohortRows.groupBy(_._2)
+              .select("image_id", "nrep")).collect()
+            .map(r => (r.getString(0), r.getString(1))).toSeq) ++
+          normNewRows.collect { case (id, _, nrep) if involvedSet(nrep) => (id, nrep) }
+        // expandSubstringPairs, driver-side and keyed on rep ids: members
+        // of the contained caption ↔ container rep and vice versa
+        val membersByRep = normCohortRows.groupBy(_._2)
           .view.mapValues(_.map(_._1)).toMap
         val subPairs = relations.flatMap { case (s, d) =>
-          (repNorm.get(s), repNorm.get(d)) match {
-            case (Some(sn), Some(dn)) =>
-              val left = membersByNorm.getOrElse(sn, Nil).map(m => (m, d))
-              val right = membersByNorm.getOrElse(dn, Nil).map(m => (s, m))
-              (left ++ right).collect { case (a, b) if a != b =>
-                if (a <= b) (a, b) else (b, a)
-              }
-            case _ => Nil
+          val left = membersByRep.getOrElse(s, Nil).map(m => (m, d))
+          val right = membersByRep.getOrElse(d, Nil).map(m => (s, m))
+          (left ++ right).collect { case (a, b) if a != b =>
+            if (a <= b) (a, b) else (b, a)
           }
         }
         touching(subPairs)

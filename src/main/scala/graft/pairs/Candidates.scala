@@ -327,9 +327,7 @@ object Candidates {
     * result set is untouched; callers pass a batch-bounded key seq. */
   def inSetPrefilter(scan: DataFrame, c: String, keys: Seq[Any],
       cap: Int = InFilterKeyCap): DataFrame =
-    if (keys.nonEmpty && keys.sizeIs <= cap &&
-        !sys.env.contains("GRAFT_NO_INSET")) // A/B kill-switch
-      scan.where(col(c).isin(keys: _*))
+    if (keys.nonEmpty && keys.sizeIs <= cap) scan.where(col(c).isin(keys: _*))
     else scan
 
   /** Max non-singleton key count the salted join will ROW-broadcast for the
@@ -424,32 +422,29 @@ object Candidates {
   def normMap(clean: DataFrame): DataFrame =
     repTag(clean.select(col("image_id"), col("norm")), Seq("norm"), "image_id", "nrep")
 
-  /** Expand norm-rep containment pairs (src=contained rep, dst=container
-    * rep) to member-level candidate pairs via the norm map. */
-  def expandSubstringPairs(repPairs0: DataFrame, normRep: DataFrame): DataFrame = {
-    val membership = normRep.select(col("image_id").as("member"), col("norm"))
-    val reps = normRep.where(col("image_id") === col("nrep"))
-      .select(col("nrep").as("id"), col("norm"))
-    val repPairs = repPairs0
-      .join(reps.select(col("id").as("src"), col("norm").as("src_norm")), "src")
-      .join(reps.select(col("id").as("dst"), col("norm").as("dst_norm")), "dst")
-
-    // every member of the contained caption ↔ container rep, and vice versa
-    val left = repPairs.join(membership, col("norm") === col("src_norm"))
-      .select(col("member").as("a"), col("dst").as("b"))
-    val right = repPairs.join(membership, col("norm") === col("dst_norm"))
-      .select(col("src").as("a"), col("member").as("b"))
-
-    left.union(right)
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("src"), greatest(col("a"), col("b")).as("dst"))
+  /** Expand norm-rep containment pairs (src = contained rep, dst = container
+    * rep) to member-level pairs, keyed on rep ids: each pair explodes into
+    * (nrep = src, other = dst) and (nrep = dst, other = src), and ONE join
+    * against the membership (image_id, nrep) pairs each end's members with
+    * the other end's rep. */
+  def expandSubstringPairs(repPairs: DataFrame, normRep: DataFrame): DataFrame =
+    repPairs
+      .select(explode(array(
+        struct(col("src").as("nrep"), col("dst").as("other")),
+        struct(col("dst").as("nrep"), col("src").as("other")))).as("e"))
+      .select(col("e.nrep").as("nrep"), col("e.other").as("other"))
+      .join(normRep.select(col("image_id"), col("nrep")), "nrep")
+      .where(col("image_id") =!= col("other"))
+      .select(least(col("image_id"), col("other")).as("src"),
+        greatest(col("image_id"), col("other")).as("dst"))
       .withColumn("source", lit("substring"))
-  }
 
   /** Substring candidates over distinct normalized captions, expanded back
-    * to all member rows (caption-level rule → member-level edges). */
+    * to all member rows (caption-level rule → member-level edges). The norm
+    * map is persisted: the probe side, the build side and the expansion all
+    * read it, and each would otherwise re-derive its groupBy + join. */
   def substringPairs(clean: DataFrame, cfg: DedupConfig): DataFrame = {
-    val normRep = normMap(clean)
+    val normRep = graft.util.Caches.persist(normMap(clean))
     val reps = normRep.where(col("image_id") === col("nrep"))
       .select(col("nrep").as("id"), col("norm"))
     expandSubstringPairs(SuffixDup.substringPairs(reps, cfg), normRep)

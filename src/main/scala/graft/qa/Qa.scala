@@ -72,10 +72,12 @@ object Qa {
     require(action == "promote" || a != b, "override endpoints must differ")
     import spark.implicits._
     val seq = maxOverrideSeq(spark, root) + 1L
+    // marker first: a crash before the append over-reports the max seq
+    // (safe), never under-reports it (a re-minted seq, a bypassed guard)
+    Layout.markerWrite(maxSeqPath(root), seq.toString)
     Seq((math.Ordering[String].min(a, b), math.Ordering[String].max(a, b), action, seq))
       .toDF("src", "dst", "action", "seq")
       .coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/$OverridesTable")
-    Layout.markerWrite(maxSeqPath(root), seq.toString)
   }
 
   def forceLink(spark: SparkSession, root: String, a: String, b: String): Unit =

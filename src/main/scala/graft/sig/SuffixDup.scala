@@ -1,7 +1,7 @@
 package graft.sig
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 import graft.config.DedupConfig
 
@@ -14,21 +14,21 @@ import graft.config.DedupConfig
  * Spark-native equivalent of a suffix array lookup:
  *
  *   build side:  every token-aligned suffix of every caption, keyed by its
- *                first W characters (W = prefix window);
- *   probe side:  every caption, keyed by its own first min(W, len) chars;
+ *                first W characters (W = a prefix tier, see `Tiers`);
+ *   probe side:  every caption of at least substringMinLen chars, keyed by
+ *                its own first W characters;
  *   join on key, then verify `contains` (removes prefix-window collisions
  *                and enforces true substring containment).
  *
  * Keying by a fixed-width prefix bounds key cardinality and makes the join
  * a plain shuffle equi-join — at 10^12 rows the explode factor is
  * O(tokens per caption) ≈ 8-25, far cheaper than an actual distributed
- * suffix array, with identical results for token-aligned matches. A probe
- * caption shorter than W uses its full text as key and suffixes emit
- * truncated prefixes of every length? No — equality of the first
- * min(W,|A|) chars of the suffix is required, so the build side emits, per
- * suffix, the single W-char prefix AND the probe side pads its key to the
- * same width by keying on min-width truncation of both sides; see
- * `prefixKey`.
+ * suffix array, with identical results for token-aligned matches. The key
+ * is the hash of the first `tier` characters on both sides: a probe keys on
+ * the widest tier its length covers, and each suffix emits one key per tier
+ * its remaining length covers. Any suffix that starts with the probe is at
+ * least as long as the probe, so it emits the probe's key and the join
+ * loses no true match; `verifyJoin` then drops hash and prefix collisions.
  */
 object SuffixDup {
 
@@ -42,8 +42,6 @@ object SuffixDup {
     * factor. Keys are xxhash64 of the prefix — longs shuffle smaller than
     * prefix strings and the verify step re-checks real containment anyway. */
   val Tiers: Seq[Int] = Seq(32)
-
-  def prefixKey(c: Column, width: Int): Column = xxhash64(substring(c, 1, width))
 
   /** Probe entries: (a_id, a_norm, tier, k) — each caption long enough to
     * be a meaningful substring, keyed on the widest tier its length covers. */
@@ -66,7 +64,9 @@ object SuffixDup {
     * suffix, covered tier), from character offsets — NOT materialized
     * suffix strings (those are O(len²) bytes per caption; offsets cut this
     * stage from 54s to single digits at 100k rows). The (b_id, tier, k)
-    * projection is what the `suffix_keys` incremental index persists. */
+    * projection is what the `suffix_keys` incremental index persists.
+    * Keys dedup per row (a repeated phrase yields one key at two offsets):
+    * with one row per id that is `dropDuplicates(b_id, tier, k)` unshuffled. */
   def suffixEntries(captions: DataFrame): DataFrame = {
     val tk = split(col("norm"), " ")
     val starts = slice(
@@ -86,14 +86,16 @@ object SuffixDup {
       }))
     captions
       .select(col("id").as("b_id"), col("norm").as("b_norm"),
-        explode(suffixKeys).as("tk"))
+        explode(array_distinct(suffixKeys)).as("tk"))
       .select(col("b_id"), col("b_norm"), col("tk.tier").as("tier"), col("tk.k").as("k"))
-      .dropDuplicates("b_id", "tier", "k")
   }
 
   /** Equi-join probes against suffix entries and verify real containment
     * (both-end token alignment). Asymmetric on purpose: the incremental
-    * path passes only the affected slice of either side. */
+    * path passes only the affected slice of either side. No `distinct`: a
+    * probe row has one (tier, k) and a build row's keys are distinct, so
+    * with one row per id on each side an (a_id, b_id) matches at most once;
+    * callers whose cohorts can repeat an id dedup the relations. */
   def verifyJoin(probe: DataFrame, suffixes: DataFrame, cfg: DedupConfig): DataFrame =
     probe
       .join(suffixes, Seq("tier", "k"))
@@ -108,7 +110,6 @@ object SuffixDup {
         .contains(concat(lit(" "), col("a_norm"), lit(" "))))
       .where(col("a_norm") =!= col("b_norm"))
       .select(col("a_id").as("src"), col("b_id").as("dst"))
-      .distinct()
 
   /**
    * Candidate (a, b) pairs where normalized caption of `a` is a token-aligned

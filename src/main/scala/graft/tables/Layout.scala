@@ -151,6 +151,12 @@ object Layout {
     markerWrite(manifestPath(root, stage), manifest)
   }
 
+  /** The `"schema"` object of a manifest ("{}" when absent or unparsable),
+    * read with a JSON parser so a nested object comes back whole. */
+  private[graft] def manifestSchema(manifest: String): String =
+    scala.util.Try(Option(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(manifest).get("schema")).fold("{}")(_.toString)).getOrElse("{}")
+
   private def schemaJson(df: DataFrame): String =
     df.schema.map(f => s""""${f.name}":"${f.dataType.simpleString}"""")
       .mkString("{", ",", "}")
@@ -198,10 +204,8 @@ object Layout {
       val dir = new Path(s"$root/$stage/$partitionBy=$partition")
       fsFor(dir).delete(dir, true)
       markerRead(manifestPath(root, stage)).foreach { m =>
-        val schema = """"schema":(\{[^}]*\})""".r.findFirstMatchIn(m)
-          .map(_.group(1)).getOrElse("{}")
         writeManifest(root, stage, math.max(manifestRows(root, stage) - r, 0L),
-          Seq(partitionBy), prev - partition, schema)
+          Seq(partitionBy), prev - partition, manifestSchema(m))
       }
     }
   }
@@ -329,11 +333,8 @@ object Layout {
     // construction, but stamp-readers (Probe's serving context) must see
     // that the stage's FILES moved — without this rewrite the manifest is
     // byte-identical and a cached context would keep serving pre-merge rows
-    val schema = markerRead(manifestPath(root, stage))
-      .flatMap(""""schema":(\{[^}]*\})""".r.findFirstMatchIn(_).map(_.group(1)))
-      .getOrElse("{}")
     writeManifest(root, stage, math.max(manifestRows(root, stage), 0L),
-      Seq(partitionBy), partitionRows(root, stage), schema)
+      Seq(partitionBy), partitionRows(root, stage), manifestSchema(manifestStamp(root, stage)))
     // a cached handle for this stage now reads superseded blocks
     synchronized(cachedStages.remove((root, stage))).foreach(_.unpersist(false))
     matched
@@ -425,11 +426,8 @@ object Layout {
 
     // rows and partition map are unchanged by construction; rewrite the
     // manifest so its `files` count reflects the new layout
-    val schema = markerRead(manifestPath(root, stage))
-      .flatMap(""""schema":(\{[^}]*\})""".r.findFirstMatchIn(_).map(_.group(1)))
-      .getOrElse("{}")
     writeManifest(root, stage, math.max(manifestRows(root, stage), 0L),
-      Seq(partitionBy), parts, schema)
+      Seq(partitionBy), parts, manifestSchema(manifestStamp(root, stage)))
     synchronized(cachedStages.remove((root, stage))).foreach(_.unpersist(false))
     (plan.size, before, listParquetFiles(dir))
   }

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.config.DedupConfig
 import graft.pairs.Candidates
+import graft.sig.SuffixDup
 
 class CandidatesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -89,5 +91,83 @@ class CandidatesSpec extends AnyFunSuite {
     val b = Candidates.saltedSelfJoin(rows.toDF("id", "band", "bkey").repartition(7), 4)
       .as[(String, String)].collect().toSet
     assert(a == b)
+  }
+
+  // substring fixture: a hot caption (24 members) contained in two
+  // containers, a caption that repeats a phrase (its suffixes share a key at
+  // two offsets) with probes that occur at both offsets, a prefix-key
+  // collision that is not token-aligned ("dog" vs "dogs"), and captions too
+  // short to be probes
+  private val hot = "the quick brown fox jumps over the lazy dog"
+  private val phrase = "alpha beta gamma delta epsilon zeta"
+  private val repeated = s"$phrase $phrase eta"
+  private val substringCaptions: Seq[(String, String)] = {
+    val groups = Seq(
+      hot -> 24,
+      s"a photo of $hot at dawn" -> 2,
+      s"$hot and the cat" -> 3,
+      s"$hot" + "s in the yard" -> 2,
+      repeated -> 2,
+      phrase -> 3,
+      s"$phrase eta" -> 1,
+      s"$phrase theta" -> 1,
+      "short caption" -> 4,
+      "an unrelated caption about a red bicycle" -> 2)
+    // ids interleave the groups, so a group's rep (min id) is not always
+    // its first listed member and containers are not always the later rows
+    groups.zipWithIndex.flatMap { case ((norm, n), g) =>
+      (0 until n).map(i => (f"i${i * 17 + g}%04d", norm))
+    }
+  }
+
+  test("substring pairs == naive token-aligned containment + member expansion") {
+    import spark.implicits._
+    val cfg = DedupConfig.default
+    val clean = substringCaptions.toDF("image_id", "norm").repartition(3)
+    val got = Candidates.substringPairs(clean, cfg)
+      .select("src", "dst", "source").as[(String, String, String)].collect()
+      .toSeq.sorted
+
+    val members = substringCaptions.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
+    val rep = members.view.mapValues(_.min).toMap
+    val expected = (for {
+      a <- members.keys.toSeq
+      b <- members.keys.toSeq
+      if SuffixDup.isTokenAlignedSubstring(a, b, cfg)
+      (x, y) <- members(a).map(m => (m, rep(b))) ++ members(b).map(m => (rep(a), m))
+      if x != y
+    } yield (Ordering[String].min(x, y), Ordering[String].max(x, y), "substring"))
+      .sorted
+    assert(members(hot).size >= 20)
+    val hotMembers = members(hot).toSet
+    assert(expected.count(p => hotMembers(p._1) || hotMembers(p._2)) > 40,
+      "the hot caption must expand to real pair volume")
+    assert(got == expected,
+      s"got-only=${got.diff(expected).take(5)} expected-only=${expected.diff(got).take(5)}")
+  }
+
+  test("suffix entries carry no duplicate key; verify join emits each pair once") {
+    import spark.implicits._
+    val cfg = DedupConfig.default
+    val reps = substringCaptions.groupBy(_._2).toSeq
+      .map { case (norm, ms) => (ms.map(_._1).min, norm) }
+    val captions = reps.toDF("id", "norm").repartition(3)
+
+    val entries = SuffixDup.suffixEntries(captions)
+      .select("b_id", "tier", "k").as[(String, Int, Long)].collect()
+    assert(entries.length == entries.distinct.length, "duplicate (b_id, tier, k)")
+    // the repeated phrase really yields one key at two offsets: its
+    // token-aligned suffixes outnumber its distinct keys
+    val repId = reps.find(_._2 == repeated).get._1
+    val starts = 0 +: repeated.indices.filter(repeated(_) == ' ').map(_ + 1)
+    val suffixes = starts.filter(repeated.length - _ >= SuffixDup.Tiers.head)
+    assert(entries.count(_._1 == repId) < suffixes.size)
+
+    val pairs = SuffixDup.substringPairs(captions, cfg)
+      .as[(String, String)].collect()
+    assert(pairs.length == pairs.distinct.length, "duplicate (src, dst)")
+    val phraseId = reps.find(_._2 == phrase).get._1
+    assert(pairs.contains((phraseId, repId)),
+      "a probe matching the repeated phrase at both offsets must still pair")
   }
 }

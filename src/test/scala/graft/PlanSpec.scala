@@ -119,6 +119,45 @@ class PlanSpec extends AnyFunSuite {
       s"candidate machinery must be window-free end to end:\n${cands.take(1500)}")
   }
 
+  /** Exchange nodes a plan runs: through AQE wrappers and query stages
+    * (a persisted relation may already be materialized), and into each
+    * persisted relation's plan once (its shuffles run once, however many
+    * scans read it). */
+  private def exchangeCount(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val seen = scala.collection.mutable.Set.empty[AnyRef]
+    def walk(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec =>
+        if (seen.add(m.relation.cacheBuilder)) walk(m.relation.cachedPlan) else 0
+      case e: Exchange => 1 + e.children.map(walk).sum
+      case o => o.children.map(walk).sum
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("substring generator plans each shuffle once") {
+    // the norm map is persisted and shared by the probe side, the build
+    // side and the member expansion; the expansion is one id-keyed join;
+    // suffix keys dedup per row — re-deriving any of these brings back
+    // exchanges
+    import graft.pairs.Candidates
+    val corpusPath = "target/planspec-corpus"
+    if (!new java.io.File(s"$corpusPath/_SUCCESS").exists()) {
+      Synth.corpus(spark, 400).write.mode("overwrite").parquet(corpusPath)
+    }
+    val clean = Dedup.features(spark.read.parquet(corpusPath), DedupConfig.default)
+      .where(!col("is_low_quality"))
+    val pairs = Candidates.substringPairs(clean, DedupConfig.default)
+    val n = exchangeCount(pairs)
+    info(s"substring plan exchanges: $n")
+    assert(n <= 12, s"$n exchanges in the substring plan:\n${plan(pairs).take(3000)}")
+  }
+
   test("decisions top-k is two-phase salted: no unbounded per-dst window input") {
     val corpusPath = "target/planspec-corpus"
     val input = spark.read.parquet(corpusPath)

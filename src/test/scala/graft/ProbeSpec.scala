@@ -228,6 +228,35 @@ class ProbeSpec extends AnyFunSuite with ParallelTestExecution {
     assert((mem1 ++ mem2 + "img-zzzzzz0007").forall(m => c1(m) == anchor))
   }
 
+  test("a null phash in a probe batch degrades to no phash candidates") {
+    val root = "target/probe-spec-nullphash"
+    deleteRec(Paths.get(root))
+    val all = Synth.corpus(spark, 200).toDF()
+    val cut = f"img-${180}%010d"
+    Dedup.runCheckpointed(spark, all.where(col("image_id") < cut), root,
+      DedupConfig.default)
+    Incremental.ensureIndexes(spark, root)
+    // one row of the batch has a null phash: it must still get a decision,
+    // and the rest of the batch must be served as usual
+    val neu = all.where(col("image_id") >= cut)
+    val nullId = neu.agg(min("image_id")).head().getString(0)
+    val batch = neu.withColumn("phash",
+      when(col("image_id") === nullId, lit(null).cast("long")).otherwise(col("phash")))
+
+    val probe = Probe.run(spark, root, batch)
+    assert(probe.outcomes.count() == batch.count())
+    val probed = rows(probe.decisions)
+    assert(probed.exists(_.head == nullId) ||
+      probe.lowQuality.where(col("image_id") === nullId).count() == 1)
+    // and an append of the same batch agrees row for row
+    val inc = Incremental.append(spark, root, batch, "1", DedupConfig.default)
+    val appended = rows(inc.decisions.where(col("batch") === "1").drop("batch"))
+    assert(probed == appended, {
+      val a = (probed -- appended).take(3); val b = (appended -- probed).take(3)
+      s"probe-only=$a append-only=$b"
+    })
+  }
+
   test("pipeline_probe driver query: one outcome per held-out row") {
     val out = graft.queries.Engine.pipelineProbe(spark, "/root/testdata/sf0.001")
       .collect()
