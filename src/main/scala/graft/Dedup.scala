@@ -59,8 +59,8 @@ object Dedup {
 
   def candidates(clean: DataFrame, cfg: DedupConfig): DataFrame = {
     val repMap = Candidates.exactRepMap(clean)
-    // rep ids are a thin id list — the join back to the (persisted) feature
-    // table broadcasts under the raised threshold, so selecting rep rows
+    // rep ids are a thin id list — the join back to the feature table
+    // broadcasts under the raised threshold, so selecting rep rows
     // costs no extra shuffle of the wide table
     val repIds = repMap.where(col("image_id") === col("rep")).select("image_id")
     val reps = clean.join(repIds, Seq("image_id"))
@@ -247,8 +247,10 @@ object Dedup {
    * partition and recompute only the affected slices (per-partition
    * manifest entries — see Layout). The full run writes batch "0".
    *
-   * Job economy: one Spark job per stage (row counts observed on the write
-   * itself), run-level metrics from manifest counts (zero jobs), decision
+   * Job economy: one write job per stage (row counts observed on the write
+   * itself; AQE adds one job per shuffle stage in the compute), each stage
+   * handed downstream as a read of its files with the manifest schema (zero
+   * jobs), run-level metrics from manifest counts (zero jobs), decision
    * counts one groupBy job, lineage flushed once.
    */
   def runCheckpointed(spark: SparkSession, input: DataFrame, root: String,
@@ -288,8 +290,7 @@ object Dedup {
     val recur = Layout.runStage(spark, root, "recurring")(recurring(clusters, cfg))
     val decis = Layout.runStage(spark, root, "decisions")(
       decisionsEnriched(clean, verified, clusters, recur, cfg))
-    val audit = Layout.runStage(spark, root, "audit", cache = false)(
-      auditLog(decis, cfg))
+    val audit = Layout.runStage(spark, root, "audit")(auditLog(decis, cfg))
     Layout.runStage(spark, root, "duplicate_history", batchCol, base)(
       duplicateHistory(decis, verified))
 
@@ -305,7 +306,7 @@ object Dedup {
    *    partition is the schema's time axis) — all riding ONE groupBy job;
    *  - quality-issue explode counts over the low-quality queue and the
    *    cluster-size histogram (`monitoring.py:216-258`, dashboards) — two
-   *    small jobs over the already-cached stage outputs;
+   *    small jobs over the stage files;
    *  - row counts and per-batch-partition rows straight from the stage
    *    manifests (no jobs); then buffered lineage flushes in one append.
    */

@@ -160,9 +160,14 @@ object Incremental {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.DurationInt
     implicit val ec: scala.concurrent.ExecutionContext = chainEc
+    // the pool's threads inherited the Caches owner of whichever call first
+    // started them; each chain registers its persists under THIS caller's
+    // owner, so a scoped caller's release covers them
+    val owner = graft.util.Caches.currentOwner
+    def chain[A](body: => A): Future[A] = Future(graft.util.Caches.scoped(owner)(body))
 
     // exact groups + minhash index/pairs
-    val fExact = Future {
+    val fExact = chain {
       val oldGroupReps = Layout.read(spark, root, "rep_map")
         .where(col("image_id") === col("rep"))
         .select(keyCols.map(col) :+ col("rep"): _*)
@@ -206,7 +211,7 @@ object Incremental {
     }
 
     // phash groups + simhash index/pairs
-    val fSim = Future {
+    val fSim = chain {
       // a row with a null phash gets no phash/simhash candidates
       val phNewValSeq = newKeyed.where(col("phash").isNotNull)
         .select("phash").collect().map(_.getLong(0)).distinct.toSeq
@@ -261,7 +266,7 @@ object Incremental {
     }
 
     // norm groups + suffix index/pairs
-    val fSub = Future {
+    val fSub = chain {
       val newNorms = newKeyed.select("image_id", "norm")
       val oldNormReps = Layout.read(spark, root, "norm_map")
         .where(col("image_id") === col("nrep")).select("norm", "nrep")
@@ -431,6 +436,13 @@ object Incremental {
           coalesce(col("__to"), col("cluster_id")).as("cluster_id"))
         .unionByName(newAssign)
 
+      // old decision rows: best/top/decision final; refresh cluster_id via
+      // the remap and re-derive is_recurring; new rows run the normal
+      // enrichment over ONLY this batch's verified pairs (every pair with a
+      // new dst lives in this batch's partition). Read before the
+      // invalidation below, while the manifest still carries the schema.
+      val decisPrev = Layout.read(spark, root, "decisions")
+        .where(col("batch") =!= batch)
       Seq("clusters", "recurring", "decisions", "audit")
         .foreach(Layout.invalidate(root, _))
       // replace-swap writes: the successors read their predecessors' live
@@ -440,12 +452,6 @@ object Incremental {
       val clustersW = Layout.runStageReplace(spark, root, "clusters")(clustersNext)
       val recurW = Layout.runStage(spark, root, "recurring")(
         Dedup.recurring(clustersW, cfg))
-      // old decision rows: best/top/decision final; refresh cluster_id via
-      // the remap and re-derive is_recurring; new rows run the normal
-      // enrichment over ONLY this batch's verified pairs (every pair with a
-      // new dst lives in this batch's partition)
-      val decisPrev = Layout.read(spark, root, "decisions")
-        .where(col("batch") =!= batch)
       // recurring is the small side (clusters over the member threshold);
       // no broadcast hint — AQE converts when it fits, exactly as the full
       // path's recurring join behaves
@@ -484,8 +490,7 @@ object Incremental {
         Dedup.decisionsEnriched(clean, verifiedAll, clustersW, recurW, cfg))
       (clustersW, recurW, decisW)
     }
-    val audit = Layout.runStage(spark, root, "audit", cache = false)(
-      Dedup.auditLog(decis, cfg))
+    val audit = Layout.runStage(spark, root, "audit")(Dedup.auditLog(decis, cfg))
     // event log: only THIS batch's events append (old rows' best matches
     // are stable — edges point old→new), never a rewrite
     Layout.runStagePartition(spark, root, "duplicate_history", batchCol, batch)(

@@ -37,7 +37,6 @@ object RunDedup {
     val recurring = result.recurring.count()
     println(s"""{"rows":$rows,"clusters":$clusters,"duplicate_rows":$dupRows,""" +
       s""""low_quality":$lowQ,"recurring_clusters":$recurring,"decisions":{$byDecision}}""")
-    graft.tables.Layout.releaseCaches(outDir)
     graft.util.Caches.releaseAll()
     spark.stop()
     // a straggler non-daemon thread must not keep the JVM (and its Spark

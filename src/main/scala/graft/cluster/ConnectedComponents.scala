@@ -128,20 +128,19 @@ object ConnectedComponents {
    * sparse by construction (edges ≪ rows — the generators link members to
    * group representatives), so the gate binds only when duplicate mass is
    * itself corpus-scale, exactly when the distributed loop is the right
-   * shape anyway.
+   * shape anyway. `localEdgeCap` is the gate (`LocalEdgeCap` by default).
    */
   def runAdaptive(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50,
-      pointerJump: Boolean = false): DataFrame = {
-    val cap = LocalEdgeCap
-    if (cap <= 0L) return run(vertices, edges, maxIter, pointerJump)
+      pointerJump: Boolean = false, localEdgeCap: Long = LocalEdgeCap): DataFrame = {
+    if (localEdgeCap <= 0L) return run(vertices, edges, maxIter, pointerJump)
     // the union-find twin is string-keyed; non-string id columns stay on
     // the distributed loop (only the pipeline's image_id paths opt in)
     val stringIds = edges.select(col("src"), col("dst")).schema.forall(
       _.dataType == org.apache.spark.sql.types.StringType)
     if (!stringIds) return run(vertices, edges, maxIter, pointerJump)
     val probe = edges.select(col("src"), col("dst"))
-      .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
-    if (probe.length > cap) return run(vertices, edges, maxIter, pointerJump)
+      .limit(math.min(localEdgeCap + 1, Int.MaxValue.toLong).toInt).collect()
+    if (probe.length > localEdgeCap) return run(vertices, edges, maxIter, pointerJump)
     val labels = runLocal(Seq.empty,
       probe.toSeq.map(r => (r.getString(0), r.getString(1))))
     val spark = vertices.sparkSession

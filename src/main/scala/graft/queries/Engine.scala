@@ -31,14 +31,6 @@ object Engine {
 
   private def toks(c: Column): Column = filter(split(c, " "), x => length(x) > 0)
 
-  /** Sketch persists are measurable (ProfileCandidates `sketch` harness
-    * A/Bs persist vs recompute with GRAFT_NO_SKETCH_PERSIST): the pre-
-    * explode sketch feeds the salted join's two passes (+ verify joins for
-    * simhash), so by default it persists. */
-  private def maybePersist(df: DataFrame): DataFrame =
-    if (sys.env.contains("GRAFT_NO_SKETCH_PERSIST")) df
-    else graft.util.Caches.persist(df)
-
   /** Corpus size for pipeline queries: scale factor drives row count
     * (sf0.001 → 1k, sf0.01 → 10k, sf0.1 → 100k). */
   def synthRows(dir: String): Long = {
@@ -82,7 +74,7 @@ object Engine {
     val cfg = DedupConfig.default
     // persisted: the shingle+sketch projection feeds the banding AND both
     // verify joins; the combo-key explode recomputes cheaply from it
-    val sh = maybePersist(Documents.spread(spark, dir, "documents")
+    val sh = graft.util.Caches.persist(Documents.spread(spark, dir, "documents")
       .select(col("doc_id").cast("string").as("id"),
         SimHash.simhash64Col(
           array_distinct(transform(Documents.shingles3(col("text")), x => xxhash64(x)))).as("sh"))
@@ -134,7 +126,7 @@ object Engine {
     // two hydration joins re-read them — the previous shape recomputed the
     // parquet scan + full-width repartition + norm reduction three times
     // per run (two of those exchanges are now gone from the plan)
-    val e = maybePersist(Documents.spread(spark, dir, "embeddings")
+    val e = graft.util.Caches.persist(Documents.spread(spark, dir, "embeddings")
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", sqrt(aggregate(transform(col("v"), x => x * x), lit(0.0), (a, x) => a + x))))
     val bits = (tbl: Int) => (0 until planes).map { p =>
@@ -146,7 +138,7 @@ object Engine {
     // shuffle moves (id, table, bucket) triples, not 64-double arrays;
     // the PRE-explode table-key arrays persist (hyperplane dot products
     // are the CPU hot path; the salted join reads the band table twice)
-    val sketch = maybePersist(e.select(col("vec_id").as("id"),
+    val sketch = graft.util.Caches.persist(e.select(col("vec_id").as("id"),
       array((0 until tables).map(bits): _*).as("bks")))
     val pairs = Candidates.saltedSelfJoinSketch(sketch, cfg.bucketSizeCap).distinct()
     // score each UNORDERED pair once, then emit both orientations: cosine
@@ -208,7 +200,7 @@ object Engine {
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
       .withColumn("nrm", sqrt(aggregate(transform(col("v"), x => x * x), lit(0.0), (a, x) => a + x)))
     // normalized vectors: dot = cosine on both the train and query sides
-    val base = maybePersist(e.select(col("vec_id"),
+    val base = graft.util.Caches.persist(e.select(col("vec_id"),
       transform(col("v"), x => x / col("nrm")).as("u")))
     // at corpus scale, Lloyd needs thousands of points per centroid, not
     // every row: `trainMod` > 1 trains on a deterministic hash-sample
@@ -446,7 +438,7 @@ object Engine {
     * the point of the multimodal-column design. */
   def audioDupPairs(spark: SparkSession, dir: String): DataFrame = {
     val cfg = DedupConfig.default
-    val feat = maybePersist(
+    val feat = graft.util.Caches.persist(
       audioFeatures(spark, dir).select(col("audio_id").as("id"), col("fingerprint").as("fp")))
     val pairs = Candidates.saltedSelfJoinSketch(
       feat.select(col("id"),

@@ -135,13 +135,12 @@ object StreamingDedup {
       graft.util.Caches.scoped(root) { Incremental.append(spark, root, batch, s"s$epochId", cfg) }
     }
     Layout.markerWrite(marker, "done")
-    // per-epoch cache hygiene: the global stages re-derived this epoch and
-    // the operator-level persists (band cohorts etc.) are superseded next
-    // epoch; without the release their disk-spilled blocks accumulate for
-    // the life of the stream. Scoped to THIS stream's frames — a global
-    // release would unpersist concurrent work's caches (another stream,
-    // interactive memoized twins in the same JVM)
-    Layout.releaseCaches(root)
+    // per-epoch cache hygiene: the operator-level persists (band cohorts
+    // etc.) are superseded next epoch; without the release their
+    // disk-spilled blocks accumulate for the life of the stream. Scoped to
+    // THIS stream's frames — a global release would unpersist concurrent
+    // work's caches (another stream, interactive memoized twins in the same
+    // JVM)
     graft.util.Caches.release(root)
   }
 }

@@ -2,10 +2,13 @@ package graft.tables
 
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 
 /**
@@ -26,6 +29,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
  *  - `write` runs ONE Spark job: the row count rides the write itself via
  *    `Observation` instead of a read-back count; the file count comes from
  *    a filesystem listing, not a second scan.
+ *  - `read` runs NO job: the read schema comes from the manifest, not from
+ *    a footer-inference scan.
  *  - lineage rows are buffered per run and flushed once (`flushLineage`),
  *    not one tiny write job per stage.
  *  - manifest row counts are readable without any job (`manifestRows`), so
@@ -151,11 +156,26 @@ object Layout {
     markerWrite(manifestPath(root, stage), manifest)
   }
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** The `"schema"` object of a manifest ("{}" when absent or unparsable),
     * read with a JSON parser so a nested object comes back whole. */
   private[graft] def manifestSchema(manifest: String): String =
-    scala.util.Try(Option(new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(manifest).get("schema")).fold("{}")(_.toString)).getOrElse("{}")
+    Try(Option(json.readTree(manifest).get("schema")).fold("{}")(_.toString)).getOrElse("{}")
+
+  /** The read schema a manifest describes: data columns in write order, then
+    * the partition columns in `partition_by` order — the order Parquet
+    * discovery yields. None when the manifest has no schema, or a type in it
+    * does not parse. */
+  private[graft] def readSchema(manifest: String): Option[StructType] = Try {
+    val m = json.readTree(manifest)
+    val fields = m.get("schema").fields().asScala
+      .map(e => StructField(e.getKey, DataType.fromDDL(e.getValue.asText))).toSeq
+    val partitionBy = m.get("partition_by").elements().asScala.map(_.asText).toSeq
+    val (parts, data) = fields.partition(f => partitionBy.contains(f.name))
+    require(fields.nonEmpty && parts.size == partitionBy.size)
+    StructType(data ++ partitionBy.map(p => parts.find(_.name == p).get))
+  }.toOption
 
   private def schemaJson(df: DataFrame): String =
     df.schema.map(f => s""""${f.name}":"${f.dataType.simpleString}"""")
@@ -210,8 +230,14 @@ object Layout {
     }
   }
 
-  def read(spark: SparkSession, root: String, stage: String): DataFrame =
-    spark.read.parquet(s"$root/$stage")
+  /** A stage's frame, read with the schema its manifest records, so building
+    * the frame runs no Spark job. Falls back to footer inference when the
+    * manifest is absent, has no schema, or does not parse. */
+  def read(spark: SparkSession, root: String, stage: String): DataFrame = {
+    val dir = s"$root/$stage"
+    markerRead(manifestPath(root, stage)).flatMap(readSchema)
+      .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+  }
 
   /** The stage manifest's raw content ("" when absent) — a cheap driver-side
     * change stamp: every mutation path (runStage overwrite, partition
@@ -335,8 +361,6 @@ object Layout {
     // byte-identical and a cached context would keep serving pre-merge rows
     writeManifest(root, stage, math.max(manifestRows(root, stage), 0L),
       Seq(partitionBy), partitionRows(root, stage), manifestSchema(manifestStamp(root, stage)))
-    // a cached handle for this stage now reads superseded blocks
-    synchronized(cachedStages.remove((root, stage))).foreach(_.unpersist(false))
     matched
   }
 
@@ -428,41 +452,19 @@ object Layout {
     // manifest so its `files` count reflects the new layout
     writeManifest(root, stage, math.max(manifestRows(root, stage), 0L),
       Seq(partitionBy), parts, manifestSchema(manifestStamp(root, stage)))
-    synchronized(cachedStages.remove((root, stage))).foreach(_.unpersist(false))
     (plan.size, before, listParquetFiles(dir))
   }
 
   /** Drop a stage's manifest so the next runStage recomputes it (the
-    * Overwrite write replaces the data files), and release the stage's
-    * cached handle — in a long-running stream each epoch re-derives the
-    * global stages, and without the unpersist the superseded cached blocks
-    * (disk-spilled ones are not LRU-evicted) accumulate per epoch. */
-  def invalidate(root: String, stage: String): Unit = {
+    * Overwrite write replaces the data files). */
+  def invalidate(root: String, stage: String): Unit =
     markerDelete(manifestPath(root, stage))
-    synchronized(cachedStages.remove((root, stage))).foreach(_.unpersist(false))
-  }
 
-  /** Release every cached stage handle registered under `root` (end-of-run
-    * hygiene for streams and benches; resume re-reads from Parquet). */
-  def releaseCaches(root: String): Unit = synchronized {
-    cachedStages.filterInPlace { case ((r, _), df) =>
-      if (r == root) { df.unpersist(false); false } else true
-    }
-    ()
-  }
+  /** Stage checkpoints hold no cached blocks (every stage frame is read back
+    * from its files), so there is nothing to release; kept for callers that
+    * release per root between units of work. */
+  def releaseCaches(root: String): Unit = ()
 
-  private val cachedStages = mutable.Map.empty[(String, String), DataFrame]
-
-  /**
-   * Resumable stage: if the stage's manifest exists, read the checkpoint and
-   * skip the compute entirely (re-run after a kill resumes here); otherwise
-   * compute WITH a memory/disk persist, write the checkpoint (the write job
-   * populates the cache — one pass), and return the CACHED DataFrame.
-   * Downstream stages read the cache instead of re-scanning the
-   * freshly-written Parquet — the checkpoint is for resume and external
-   * consumers, not for intra-run data flow (round-1's write→read-back
-   * round-trips were a measured chunk of the fixed per-run cost).
-   */
   /** Tag all jobs of `f` (including AQE materialization jobs, which capture
     * the submitting thread's local properties) with a stage label — this is
     * what makes `tools.StageTimer` attribution readable. */
@@ -473,35 +475,31 @@ object Layout {
     try f finally sc.setJobDescription(prev)
   }
 
+  /**
+   * Resumable stage: if the stage's manifest exists, skip the compute
+   * entirely (a re-run after a kill resumes here); otherwise write `compute`
+   * straight to Parquet (ONE job, the row count observed on the write) and
+   * stamp the manifest. Either way the stage comes back read from its files
+   * with the manifest's schema, so downstream plans start at a file scan:
+   * persisting the compute first cost a second job per stage under AQE (a
+   * cache-building job, then the write over the cache scan), and every later
+   * plan carried the whole upstream plan inside the cached relation.
+   */
   def runStage(spark: SparkSession, root: String, stage: String,
       partitionBy: Seq[String] = Nil,
-      partitionValue: Option[String] = None,
-      cache: Boolean = true)(compute: => DataFrame): DataFrame = {
+      partitionValue: Option[String] = None)(compute: => DataFrame): DataFrame = {
     if (!isComplete(root, stage)) {
       val t0 = System.nanoTime()
-      val (df, rows) = described(spark, s"graft:$stage") {
-        // evaluated inside the description scope: eager work in the stage
-        // closure (e.g. the CC iteration jobs) must carry the label too
-        // `cache = false` for terminal stages with no same-run consumer
-        // (audit): the MEMORY_AND_DISK columnar build of a wide table is
-        // pure overhead when nothing reads it back this run
-        if (cache) {
-          val d = compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          synchronized {
-            cachedStages.put((root, stage), d).foreach(_.unpersist(false))
-          }
-          (d, write(d, root, stage, partitionBy, partitionValue))
-        } else {
-          val rows = write(compute, root, stage, partitionBy, partitionValue)
-          (read(spark, root, stage), rows)
-        }
+      // evaluated inside the description scope: eager work in the stage
+      // closure (e.g. the CC iteration jobs) must carry the label too
+      val rows = described(spark, s"graft:$stage") {
+        write(compute, root, stage, partitionBy, partitionValue)
       }
       bufferLineage(root, stage, rows, (System.nanoTime() - t0) / 1e9, skipped = false)
-      df
     } else {
       bufferLineage(root, stage, -1L, 0.0, skipped = true)
-      read(spark, root, stage)
     }
+    read(spark, root, stage)
   }
 
   /**
@@ -518,9 +516,7 @@ object Layout {
    * manifest BEFORE computing, and a crash mid-write or mid-swap leaves the
    * manifest absent, which routes the next run onto the slow path that
    * re-derives these stages from their true upstream (`verified`).
-   * Returns the stage re-read from the swapped-in files, unpersisted —
-   * downstream consumers each read a pruned column subset, which is cheaper
-   * than a wide columnar cache build.
+   * Returns the stage re-read from the swapped-in files, like `runStage`.
    */
   def runStageReplace(spark: SparkSession, root: String, stage: String)(
       compute: => DataFrame): DataFrame = {
@@ -541,7 +537,6 @@ object Layout {
         writeManifest(root, stage, n, Nil, Map.empty, schemaJson(df))
         n
       }
-      synchronized { cachedStages.remove((root, stage)).foreach(_.unpersist(false)) }
       bufferLineage(root, stage, rows, (System.nanoTime() - t0) / 1e9, skipped = false)
     } else {
       bufferLineage(root, stage, -1L, 0.0, skipped = true)

@@ -23,15 +23,13 @@ object ProfileCandidates {
 
     val only = sys.env.get("GRAFT_PROFILE_ONLY")
     if (only.contains("sketch")) {
-      // persist-vs-recompute attribution for the sketch caches: run with
-      // and without GRAFT_NO_SKETCH_PERSIST (fresh JVM each) and compare
-      // reps 2-3 (rep 1 pays codegen). args(0) = table dir (e.g. sf0.1).
+      // timing of the sketch-persisting doc queries: compare reps 2-3
+      // (rep 1 pays codegen). args(0) = table dir (e.g. sf0.1).
       val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-      val tag = if (sys.env.contains("GRAFT_NO_SKETCH_PERSIST")) "nopersist" else "persist"
       def run3(name: String)(f: => Long): Unit = (1 to 3).foreach { i =>
         val t0 = System.nanoTime()
         val n = f
-        println(f"[sketch] $tag $name rep$i rows=$n%8d  ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+        println(f"[sketch] $name rep$i rows=$n%8d  ${(System.nanoTime() - t0) / 1e9}%7.2f s")
         graft.util.Caches.releaseAll(); spark.sqlContext.clearCache()
       }
       run3("simhash") { graft.queries.Engine.simhashDocs(spark, dir).count() }

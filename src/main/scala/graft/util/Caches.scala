@@ -39,17 +39,20 @@ object Caches {
   /** Run `f` with persists registered under `token` (thread-scoped). */
   def scoped[A](token: String)(f: => A): A = owner.withValue(token)(f)
 
-  /** Kill-switch for perf attribution (ProfileCandidates/ScalingBench A/B):
-    * with GRAFT_NO_SKETCH_PERSIST set, operator-level persists become
-    * no-ops and every consumer recomputes its input lineage. */
-  private val disabled = sys.env.contains("GRAFT_NO_SKETCH_PERSIST")
+  /** The calling thread's owner token. A pooled thread inherits the owner of
+    * whoever first started it, so work handed to a pool must capture this
+    * and re-enter `scoped` with it. */
+  private[graft] def currentOwner: String = owner.value
+
+  /** The frames registered under `token` (empty when none). */
+  private[graft] def registered(token: String): Seq[DataFrame] =
+    synchronized(registry.get(token).fold(Seq.empty[DataFrame])(_.toSeq))
 
   /** Persist `df` (idempotent per frame) and remember it under the current
     * scope's owner for release. */
   def persist(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER): DataFrame =
-    if (disabled) df
-    else synchronized {
+    synchronized {
       registry.getOrElseUpdate(owner.value, mutable.ArrayBuffer.empty) += df.persist(level)
       df
     }

@@ -45,9 +45,17 @@ class CcSpec extends AnyFunSuite with ParallelTestExecution {
   test("runAdaptive == run under the gate and falls back above it") {
     import spark.implicits._
     val (vertices, edges, ids) = chain(12)
-    val gated = ConnectedComponents.runAdaptive(vertices, edges)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val gated = labels(ConnectedComponents.runAdaptive(vertices, edges))
     assert(ids.forall(gated(_) == "v-0000"))
+    // the chain's 11 edges exceed a cap of 5 (distributed fallback); cap 0
+    // disables the driver path outright — both must label exactly as run
+    val plain = labels(ConnectedComponents.run(vertices, edges))
+    assert(gated == plain)
+    for (cap <- Seq(5L, 0L))
+      assert(labels(ConnectedComponents.runAdaptive(vertices, edges,
+        localEdgeCap = cap)) == plain, s"cap $cap")
     // singletons (vertices absent from edges) keep their own id
     val extra = (ids :+ "v-9999").toDF("id")
     val withSingleton = ConnectedComponents.runAdaptive(extra, edges)

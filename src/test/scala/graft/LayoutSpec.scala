@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +13,42 @@ import graft.tables.Layout
 
 class LayoutSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
+
+  private def fresh(root: String): String = {
+    val dir = Paths.get(root)
+    if (Files.exists(dir))
+      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    root
+  }
+
+  /** Jobs `f` starts on this thread. Its jobs carry this thread's job group;
+    * a fence job run after `f` drains the asynchronous listener bus, which
+    * delivers events in order — and other suites' jobs carry other groups. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"layout-spec-${java.util.UUID.randomUUID}"
+    val seen = new AtomicInteger
+    val fence = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) seen.incrementAndGet()
+          else if (g == s"$group-fence") fence.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      f
+      sc.setJobGroup(s"$group-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fence.await(120, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    seen.get
+  }
 
   test("manifest schema parser keeps a nested schema object whole") {
     val nested = """{"id":"string","s":{"x":"bigint","y":{"z":"string"}},"q}":"int"}"""
@@ -36,5 +75,45 @@ class LayoutSpec extends AnyFunSuite {
     Layout.dropPartition(root, "s", "batch", "1")
     assert(Layout.manifestSchema(Layout.manifestStamp(root, "s")) == before)
     assert(Layout.manifestRows(root, "s") == 2L)
+  }
+
+  test("Layout.read builds a complete stage's frame without a Spark job") {
+    import spark.implicits._
+    val root = fresh("target/layout-spec-read")
+    Layout.runStage(spark, root, "t", Seq("batch"), Some("0"))(
+      Seq(("a", 1L), ("b", 2L)).toDF("id", "x").withColumn("batch", lit("0")))
+    var cols = Seq.empty[String]
+    assert(jobsOf { cols = Layout.read(spark, root, "t").columns.toSeq } == 0)
+    assert(cols == Seq("id", "x", "batch"))
+  }
+
+  test("manifest read schema == inferred schema: partition column mid-row, array<struct>") {
+    import spark.implicits._
+    val root = fresh("target/layout-spec-schema")
+    // the low_quality shape: `batch` is written before `status`, but
+    // discovery puts the partition column last
+    Layout.runStage(spark, root, "low_quality", Seq("batch"), Some("0"))(
+      Seq(("a", "cap", Seq("short"), 0.5, "low"), ("b", null, Seq.empty[String], 0.0, "low"))
+        .toDF("image_id", "caption", "issues", "quality_score", "quality_severity")
+        .withColumn("batch", lit("0"))
+        .withColumn("status", lit("pending")))
+    // the decisions shape: top_matches is array<struct<match_id, score>>
+    Layout.runStage(spark, root, "decisions")(
+      Seq(("a", Seq(("b", 0.9), ("c", 0.7)), true), ("b", Seq.empty[(String, Double)], false))
+        .toDF("image_id", "tm", "is_recurring")
+        .select(col("image_id"),
+          transform(col("tm"), x => struct(x("_1").as("match_id"), x("_2").as("score")))
+            .as("top_matches"),
+          col("is_recurring")))
+    for (stage <- Seq("low_quality", "decisions")) {
+      val built = Layout.readSchema(Layout.manifestStamp(root, stage))
+      assert(built.isDefined, s"$stage: manifest schema did not parse")
+      val inferred = spark.read.parquet(s"$root/$stage").schema
+      assert(built.get == inferred, s"$stage:\n${built.get.treeString}\nvs\n${inferred.treeString}")
+      assert(Layout.read(spark, root, stage).schema == inferred)
+    }
+    assert(Layout.read(spark, root, "low_quality").columns.last == "batch")
+    assert(Layout.read(spark, root, "decisions").select(col("top_matches.match_id"))
+      .as[Seq[String]].collect().toSet == Set(Seq("b", "c"), Seq.empty))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -182,5 +184,35 @@ class PlanSpec extends AnyFunSuite {
     // introduce one (train runs OUTSIDE this plan, as build actions)
     val windows = "\\bWindow \\[".r.findAllIn(p).size
     assert(windows == 1, s"expected exactly the top-k window, found $windows:\n${p.take(1200)}")
+  }
+
+  test("runCheckpointed hands back stage files: no InMemoryRelation in its frames") {
+    // each stage is written once and read back from its files; a persisted
+    // stage would carry its whole upstream plan into every later plan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val corpusPath = "target/planspec-corpus"
+    if (!new java.io.File(s"$corpusPath/_SUCCESS").exists()) {
+      Synth.corpus(spark, 400).write.mode("overwrite").parquet(corpusPath)
+    }
+    val root = "target/planspec-checkpointed"
+    val rootDir = java.nio.file.Paths.get(root)
+    if (java.nio.file.Files.exists(rootDir))
+      java.nio.file.Files.walk(rootDir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
+    val r = Dedup.runCheckpointed(spark, spark.read.parquet(corpusPath), root,
+      DedupConfig.default)
+    for ((name, df) <- Seq("features" -> r.features, "lowQuality" -> r.lowQuality,
+        "candidates" -> r.candidates, "verified" -> r.verified, "clusters" -> r.clusters,
+        "decisions" -> r.decisions, "recurring" -> r.recurring, "audit" -> r.audit)) {
+      val cached = df.queryExecution.optimizedPlan.collect { case m: InMemoryRelation => m }
+      assert(cached.isEmpty, s"$name plan holds ${cached.size} InMemoryRelation(s)")
+    }
+    // every stage the run wrote reads back with its manifest's schema,
+    // which must be the schema footer inference yields
+    for (stage <- Seq("features", "low_quality", "candidates", "verified", "clusters",
+        "recurring", "decisions", "audit", "duplicate_history")) {
+      val built = graft.tables.Layout.readSchema(graft.tables.Layout.manifestStamp(root, stage))
+      assert(built.contains(spark.read.parquet(s"$root/$stage").schema), stage)
+    }
   }
 }
