@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.cluster.ConnectedComponents
 import graft.config.DedupConfig
 import graft.metrics.Metrics
-import graft.pairs.{Candidates, PairVerifier}
+import graft.pairs.{Candidates, LocalCandidates, PairVerifier}
 import graft.quality.Quality
 import graft.sig.Shingle
 import graft.tables.Layout
@@ -35,8 +35,12 @@ final case class DedupResult(
  *
  * Stage graph (each arrow a shuffle boundary):
  *   input → quality split → feature projection (norm, shingles, phash)
- *         → exact-group rep (1 shuffle on exact_key)
- *         → candidates: exact ∪ minhash-LSH ∪ simhash ∪ substring
+ *         → candidates: exact ∪ minhash-LSH ∪ simhash ∪ substring —
+ *           placed once by a row gate (`candidatesPlaced`): a batch that
+ *           fits the driver budget is one bounded collect of its key
+ *           columns and the driver twins (`LocalCandidates`); a larger one
+ *           runs the distributed generators (exact-group rep on exact_key,
+ *           salted band joins, suffix join)
  *         → verify (hydrate ×2 + measures)
  *         → edges → connected components → clusters
  *         → decisions / recurring
@@ -57,6 +61,7 @@ object Dedup {
         "issues", "quality_score", "quality_severity", "is_low_quality",
         "norm", "shingles")
 
+  /** The four generators as distributed Spark plans. */
   def candidates(clean: DataFrame, cfg: DedupConfig): DataFrame = {
     val repMap = Candidates.exactRepMap(clean)
     // rep ids are a thin id list — the join back to the feature table
@@ -68,6 +73,37 @@ object Dedup {
       .unionByName(Candidates.minhashPairs(reps, cfg))
       .unionByName(Candidates.simhashPairs(clean, cfg))
       .unionByName(Candidates.substringPairs(clean, cfg))
+  }
+
+  /**
+   * The candidates stage, placed once from a measured size (the
+   * `ConnectedComponents.runAdaptive` pattern): one bounded
+   * `limit(cap + 1)` collect of the clean key columns; when at most
+   * `localRowCap` rows come back they run through the driver twins and the
+   * stage is one LocalRelation, otherwise (or when the twins' pair count
+   * passes the driver budget) `candidates` plans the distributed
+   * generators. Same (src, dst, source) multiset either way
+   * (CandidatesSpec). Returns the frame and its placement, "local" or
+   * "distributed". The cap defaults to `LocalCandidates.rowCap(cfg)`; a cap
+   * <= 0 skips the collect.
+   */
+  def candidatesPlaced(clean: DataFrame, cfg: DedupConfig,
+      localRowCap: Option[Long] = None): (DataFrame, String) = {
+    val cap = localRowCap.getOrElse(LocalCandidates.rowCap(cfg))
+    val local =
+      if (cap <= 0L) None
+      else {
+        // one partition under the limit: the collect is ONE job whose task
+        // stops after cap + 1 rows (over many partitions a limit-collect
+        // scans one, then a growing batch — a job each)
+        val rows = clean.select(LocalCandidates.KeyCols.map(col): _*).coalesce(1)
+          .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+        if (rows.length > cap) None else LocalCandidates.candidates(rows.toSeq, cfg)
+      }
+    val spark = clean.sparkSession
+    import spark.implicits._
+    local.fold((candidates(clean, cfg), "distributed"))(c =>
+      (c.toDF("src", "dst", "source"), "local"))
   }
 
   def decisions(clean: DataFrame, edges: DataFrame, clusters: DataFrame,
@@ -217,7 +253,7 @@ object Dedup {
       .select("image_id", "caption", "issues", "quality_score", "quality_severity")
       .withColumn("status", lit(graft.qa.Qa.Pending))
 
-    val cands = candidates(clean, cfg)
+    val (cands, _) = candidatesPlaced(clean, cfg)
     val verified = PairVerifier.verify(cands, clean, cfg)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val edges = verified.where(col("is_edge")).select("src", "dst", "match_score")
@@ -251,7 +287,10 @@ object Dedup {
    * itself; AQE adds one job per shuffle stage in the compute), each stage
    * handed downstream as a read of its files with the manifest schema (zero
    * jobs), run-level metrics from manifest counts (zero jobs), decision
-   * counts one groupBy job, lineage flushed once.
+   * counts one groupBy job, lineage flushed once. The candidates stage of a
+   * batch under the driver gate is two jobs, its bounded key collect and
+   * the write of one LocalRelation; above the gate the distributed
+   * generators cost about 35.
    */
   def runCheckpointed(spark: SparkSession, input: DataFrame, root: String,
       cfg: DedupConfig = DedupConfig.default): DedupResult = {
@@ -267,8 +306,13 @@ object Dedup {
         // and Qa.reject through Layout.mergeStage
         .withColumn("status", lit(graft.qa.Qa.Pending)))
 
-    val cands = Layout.runStage(spark, root, "candidates", batchCol, base)(
-      candidates(clean, cfg).withColumn("batch", lit(BaseBatch)))
+    // set only when this run computes the stage (a resumed run skips it)
+    var placement: Option[String] = None
+    val cands = Layout.runStage(spark, root, "candidates", batchCol, base) {
+      val (df, where) = candidatesPlaced(clean, cfg)
+      placement = Some(where)
+      df.withColumn("batch", lit(BaseBatch))
+    }
     val verified = Layout.runStage(spark, root, "verified", batchCol, base)(
       PairVerifier.verify(cands, clean, cfg).withColumn("batch", lit(BaseBatch)))
     // QA overrides (force-link/split) apply at every edge derivation so a
@@ -294,7 +338,7 @@ object Dedup {
     Layout.runStage(spark, root, "duplicate_history", batchCol, base)(
       duplicateHistory(decis, verified))
 
-    writeRunMetrics(spark, root, decis, lowQ, clusters)
+    writeRunMetrics(spark, root, decis, lowQ, clusters, placement)
     DedupResult(clean, lowQ, cands, verified, clusters, decis, recur, audit)
   }
 
@@ -308,10 +352,13 @@ object Dedup {
    *    cluster-size histogram (`monitoring.py:216-258`, dashboards) — two
    *    small jobs over the stage files;
    *  - row counts and per-batch-partition rows straight from the stage
-   *    manifests (no jobs); then buffered lineage flushes in one append.
+   *    manifests (no jobs), and — when this run computed the candidates
+   *    stage — its placement, `placement[local|distributed]` with the clean
+   *    row count as value; then buffered lineage flushes in one append.
    */
   private[graft] def writeRunMetrics(spark: SparkSession, root: String,
-      decis: DataFrame, lowQ: DataFrame, clusters: DataFrame): Unit = {
+      decis: DataFrame, lowQ: DataFrame, clusters: DataFrame,
+      placement: Option[String] = None): Unit = {
     val batchCol =
       if (decis.columns.contains("batch")) col("batch") else lit(BaseBatch)
     // ONE collect job for all three aggregate families (decision counts +
@@ -353,7 +400,9 @@ object Dedup {
       .map(r => ("low_quality", s"issue[${r.getString(1)}]", r.getDouble(3)))
     val histRows = all.filter(_.getString(0) == "hist").toSeq
       .map(r => ("clusters", s"size[${r.getString(1)}]", r.getDouble(3)))
-    Layout.appendMetrics(spark, root, Seq(
+    val placementRow = placement.map(p => ("candidates", s"placement[$p]",
+      (Layout.manifestRows(root, "features") - Layout.manifestRows(root, "low_quality")).toDouble))
+    Layout.appendMetrics(spark, root, placementRow.toSeq ++ Seq(
       ("candidates", "pairs", Layout.manifestRows(root, "candidates").toDouble),
       ("clusters", "rows", Layout.manifestRows(root, "clusters").toDouble)) ++
       Layout.partitionMetricRows(root, "features") ++

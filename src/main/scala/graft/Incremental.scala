@@ -171,9 +171,11 @@ object Incremental {
       val oldGroupReps = Layout.read(spark, root, "rep_map")
         .where(col("image_id") === col("rep"))
         .select(keyCols.map(col) :+ col("rep"): _*)
-      // stream the big rep table, broadcast the new keys — no corpus shuffle
-      val matched = oldGroupReps.join(broadcast(newKeyed), keyCols)
-        .select((Seq("image_id") ++ keyCols :+ "rep").map(col): _*)
+      // stream the big rep table, broadcast the new keys — no corpus
+      // shuffle; null-safe, as the rep map groups null keys together
+      val matched = oldGroupReps.join(broadcast(newKeyed),
+          keyCols.map(k => oldGroupReps(k) <=> newKeyed(k)).reduce(_ && _))
+        .select(newKeyed("image_id") +: keyCols.map(newKeyed(_)) :+ oldGroupReps("rep"): _*)
       // repTag, not a min-over-window: batch-bounded here, but the batch can
       // itself carry a hot caption — and the candidate machinery is asserted
       // Window-free end to end (PlanSpec)

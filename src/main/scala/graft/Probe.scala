@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.cluster.ConnectedComponents
 import graft.config.DedupConfig
-import graft.pairs.{Candidates, PairVerifier}
+import graft.pairs.{Candidates, LocalCandidates, PairVerifier}
 import graft.sig.SuffixDup
 import graft.tables.Layout
 
@@ -277,114 +277,6 @@ object Probe {
     finally sc.setJobDescription(null)
   }
 
-  // ---- driver-side twins of the batch-local derivations -------------------
-  // The round-5 probe localized batch state but still ran every batch-local
-  // DERIVATION (rep tagging, banding, suffix keys, pair emission) as its own
-  // driver-coordinated Spark job over a LocalRelation — pure scheduling
-  // floor at serving batch sizes (~0.1-0.2 s each, ~25 sequential jobs).
-  // These twins compute the same values in driver Scala using the SAME
-  // primitives the Column forms call (MinHash.signature/bandKeys,
-  // SimHash.comboKeys, XXH64 over UTF8String bytes — bit-parity pinned by
-  // SigSpec), so only the index-cohort fetches remain as cluster jobs.
-  // ProbeSpec's byte-parity contract (probe ≡ append's decisions) is the
-  // regression net for every one of them.
-
-  import org.apache.spark.sql.catalyst.expressions.XXH64
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private def xxhSub(u: UTF8String, pos: Int, len: Int): Long = {
-    val s = u.substringSQL(pos, len)
-    XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-  }
-
-  /** Min-id representative per key over local rows — `Candidates.repTag`'s
-    * group-min without the groupBy+join jobs. Returns id -> rep. */
-  private def repTagLocal[K](rows: Seq[(String, K)]): Map[String, String] = {
-    val mins = scala.collection.mutable.HashMap.empty[K, String]
-    rows.foreach { case (id, k) =>
-      val cur = mins.getOrElse(k, null)
-      if (cur == null || id < cur) mins(k) = id
-    }
-    rows.iterator.map { case (id, k) => id -> mins(k) }.toMap
-  }
-
-  /** Scala twin of `Candidates.minhashBanded` (posexplode of band keys):
-    * (id, band, bkey) rows for every rep with non-empty shingles. */
-  private def minhashBandedLocal(rows: Seq[(String, Seq[Long])],
-      cfg: DedupConfig): Seq[(String, Int, Long)] = {
-    val cs = graft.sig.MinHash.coeffs(cfg.numHashes, cfg.hashSeed)
-    rows.flatMap { case (id, sh) =>
-      if (sh == null || sh.isEmpty) Nil
-      else graft.sig.MinHash.bandKeys(
-        graft.sig.MinHash.signature(sh.toArray, cs), cfg.bands, cfg.hashSeed)
-        .iterator.zipWithIndex.map { case (k, b) => (id, b, k) }.toSeq
-    }
-  }
-
-  /** Scala twin of `SuffixDup.probeEntries`: widest covered tier + prefix
-    * key, hashed over the same UTF8 bytes `xxhash64(substr)` hashes. */
-  private def probeEntriesLocal(reps: Seq[(String, String)],
-      cfg: DedupConfig): Seq[(String, String, Int, Long)] =
-    reps.flatMap { case (id, norm) =>
-      val u = UTF8String.fromString(norm)
-      val n = u.numChars()
-      if (n >= cfg.substringMinLen && SuffixDup.Tiers.exists(n >= _)) {
-        val tier = SuffixDup.Tiers.filter(n >= _).max
-        Seq((id, norm, tier, xxhSub(u, 1, tier)))
-      } else Nil
-    }
-
-  /** Scala twin of `SuffixDup.suffixEntries`: one key per (token-aligned
-    * suffix, covered tier), deduped on (b_id, tier, k). Token starts are
-    * code-point positions, matching the Column form's char arithmetic. */
-  private def suffixEntriesLocal(
-      reps: Seq[(String, String)]): Seq[(String, String, Int, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int, Long)]
-    reps.foreach { case (id, norm) =>
-      val u = UTF8String.fromString(norm)
-      val cps = norm.codePoints().toArray
-      val n = cps.length
-      val starts = scala.collection.mutable.ArrayBuffer(1)
-      var i = 0
-      while (i < n) { if (cps(i) == ' '.toInt) starts += i + 2; i += 1 }
-      val seen = scala.collection.mutable.HashSet.empty[(Int, Long)]
-      starts.foreach { p =>
-        val rem = n - p + 1
-        if (rem >= SuffixDup.Tiers.head) SuffixDup.Tiers.foreach { t =>
-          if (rem >= t) {
-            val k = xxhSub(u, p, t)
-            if (seen.add((t, k))) out += ((id, norm, t, k))
-          }
-        }
-      }
-    }
-    out.toSeq
-  }
-
-  /** Driver twin of the salted grid join over a localized cohort: all
-    * unordered same-bucket pairs, min-first (the exact pair set
-    * `Candidates.saltedSelfJoin` emits — CandidatesSpec pins grid == naive
-    * self-join; the cap only controls distributed parallelism, never the
-    * pair set). */
-  private def bucketPairsLocal(
-      rows: Seq[(String, Int, Long)]): Seq[(String, String)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    rows.groupBy(r => (r._2, r._3)).valuesIterator.foreach { g =>
-      val ids = g.map(_._1).toArray
-      var i = 0
-      while (i < ids.length - 1) {
-        var j = i + 1
-        while (j < ids.length) {
-          val a = ids(i); val b = ids(j)
-          out += (if (a <= b) (a, b) else (b, a))
-          j += 1
-        }
-        i += 1
-      }
-    }
-    out.toSeq
-  }
-
   private def evaluate(ctx: Context, input: DataFrame): ProbeResult =
     withProbeConf(ctx.spark) {
       val spark = ctx.spark
@@ -431,12 +323,12 @@ object Probe {
 
       // One decode+fingerprint pass over the batch, then the rows live on
       // the driver: every batch-local DERIVATION below runs in driver Scala
-      // (the spec-pinned twins above), and only joins against the cached
-      // index stages (each immediately re-localized — the results are
-      // cohort-sized) run as cluster jobs. Column-level logic is IDENTICAL
-      // to append's — the same primitives over the same shapes, only the
-      // physical placement changes (ProbeSpec's byte-parity contract is the
-      // regression net).
+      // (the spec-pinned `LocalCandidates` twins), and only joins against
+      // the cached index stages (each immediately re-localized — the
+      // results are cohort-sized) run as cluster jobs. Column-level logic
+      // is IDENTICAL to append's — the same primitives over the same
+      // shapes, only the physical placement changes (ProbeSpec's
+      // byte-parity contract is the regression net).
       val feats = L("feats")(Dedup.features(input, cfg))
       val cleanNew = feats.where(!col("is_low_quality"))
       // filters/projections of a LocalRelation fold at optimization time —
@@ -470,14 +362,16 @@ object Probe {
         val newKeyed = cleanNew.select((Seq("image_id") ++ keyCols).map(col): _*)
         // the ONE cluster fetch of this chain head: the rep cohort join
         // keys on multiple columns (no single-column literal prefilter
-        // applies), so the group index is probed by broadcast join
+        // applies), so the group index is probed by broadcast join —
+        // null-safe, as the rep map groups null keys together
         val matchedRows = L("matched")(
-          idx.oldGroupReps.join(broadcast(newKeyed), keyCols)
+          idx.oldGroupReps.join(broadcast(newKeyed),
+            keyCols.map(k => idx.oldGroupReps(k) <=> newKeyed(k)).reduce(_ && _))
             .select(col("image_id"), col("rep"))).collect()
           .map(r => r.getString(0) -> r.getString(1)).toMap
         // unmatched rows rep-tag among themselves (driver group-min — the
         // same min-id-per-key repTag computes)
-        val unmatchedTag = repTagLocal(
+        val unmatchedTag = LocalCandidates.repTag(
           cleanRows.toSeq.filterNot(r => matchedRows.contains(r.getString(0)))
             .map(r => r.getString(0) ->
               ((r.get(1), r.get(2), r.get(3), r.get(4), r.get(5)))))
@@ -487,7 +381,7 @@ object Probe {
           case (id, rep) if id != rep => (rep, id)
         }
         // banding of the new reps: driver Scala over the batch's shingles
-        val bandedNew = minhashBandedLocal(
+        val bandedNew = LocalCandidates.minhashBanded(
           cleanRows.toSeq.filter(r => newRepIds.contains(r.getString(0)))
             .map(r => r.getString(0) ->
               (if (r.isNullAt(6)) null else r.getSeq[Long](6))), cfg)
@@ -504,7 +398,7 @@ object Probe {
             .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
             .filter(r => affectedSet.contains((r._2, r._3))).toSeq
         // pair emission over the localized cohort is driver work now
-        val mhNew = touching(bucketPairsLocal(cohortRows ++ bandedNew))
+        val mhNew = touching(LocalCandidates.bucketPairs(cohortRows ++ bandedNew))
         (exactNew, mhNew)
       }
 
@@ -523,32 +417,18 @@ object Probe {
           .map(r => (r.getString(0), r.getLong(1))).toSeq
         val presentOld = phOldCohort.map(_._2).toSet
         // min image_id per touched phash over old cohort + batch rows
-        val prepOf = {
-          val mins = scala.collection.mutable.HashMap.empty[Long, String]
-          (phOldCohort ++ phNew).foreach { case (id, ph) =>
-            val cur = mins.getOrElse(ph, null)
-            if (cur == null || id < cur) mins(ph) = id
-          }
-          mins
-        }
+        val prepOf = LocalCandidates.repTag(phOldCohort ++ phNew)
         val samePhashNew = phNew.collect {
-          case (id, ph) if id != prepOf(ph) => (prepOf(ph), id)
+          case (id, _) if id != prepOf(id) => (prepOf(id), id)
         }
+        // reps of the batch's phashes the corpus has not seen
         val newPhReps = {
-          val mins = scala.collection.mutable.HashMap.empty[Long, String]
-          phNew.foreach { case (id, ph) =>
-            if (!presentOld.contains(ph)) {
-              val cur = mins.getOrElse(ph, null)
-              if (cur == null || id < cur) mins(ph) = id
-            }
-          }
-          mins.toSeq.map(_.swap) // (id, phash)
+          val unseen = phNew.filterNot(p => presentOld.contains(p._2))
+          val rep = LocalCandidates.repTag(unseen)
+          unseen.filter(p => rep(p._1) == p._1)
         }
         val newPhRepIds = newPhReps.map(_._1).toSet
-        val simBandedNew = newPhReps.flatMap { case (id, ph) =>
-          graft.sig.SimHash.comboKeys(ph, cfg.phashBands, cfg.phashAgree)
-            .iterator.zipWithIndex.map { case (k, b) => (id, b, k) }
-        }
+        val simBandedNew = LocalCandidates.simhashBanded(newPhReps, cfg)
         val affectedCombos = simBandedNew.map(r => (r._2, r._3)).distinct
         val comboSet = affectedCombos.toSet
         val simCohortRows =
@@ -559,7 +439,7 @@ object Probe {
               .select("id", "band", "bkey")).collect()
             .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
             .filter(r => comboSet.contains((r._2, r._3))).toSeq
-        val simBandNew = bucketPairsLocal(simCohortRows ++ simBandedNew)
+        val simBandNew = LocalCandidates.bucketPairs(simCohortRows ++ simBandedNew)
           .filter(p => newPhRepIds.contains(p._1) || newPhRepIds.contains(p._2))
         samePhashNew ++ simBandNew
       }
@@ -577,7 +457,7 @@ object Probe {
             .select("norm", "nrep")).collect()
           .map(r => (r.getString(0), r.getString(1))).toSeq
         val oldRepByNorm = oldNormCohort.toMap
-        val unmatchedTag = repTagLocal(
+        val unmatchedTag = LocalCandidates.repTag(
           newNorms.filterNot(r => oldRepByNorm.contains(r._2)))
         val normNewRows = newNorms.map { case (id, norm) =>
           (id, norm, oldRepByNorm.getOrElse(norm, unmatchedTag(id)))
@@ -590,8 +470,8 @@ object Probe {
         // the new-probes-vs-old-builds chain (r1) and the old-probes-vs-
         // new-builds chain (r2) share only touchedReps (already resolved
         // here) — their fused fetch+verify jobs overlap
-        val probesNew = probeEntriesLocal(touchedReps, cfg)
-        val buildsNew = suffixEntriesLocal(touchedReps)
+        val probesNew = LocalCandidates.probeEntries(touchedReps, cfg)
+        val buildsNew = LocalCandidates.suffixEntries(touchedReps)
         val suffixSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("b_id",
             org.apache.spark.sql.types.StringType),
@@ -641,7 +521,7 @@ object Probe {
           val probeCohort = tierKFiltered(idx.oldProbes, buildTierKSet)
             .select("a_id", "a_norm", "tier", "k")
             .unionByName(suffixDf(
-              probeEntriesLocal(normNewReps, cfg)
+              LocalCandidates.probeEntries(normNewReps, cfg)
                 .filter(t => tkSet.contains((t._3, t._4))), aSide = true))
           L("r2")(SuffixDup.verifyJoin(probeCohort,
             suffixDf(buildsNew, aSide = false), cfg))
@@ -663,16 +543,9 @@ object Probe {
           normNewRows.collect { case (id, _, nrep) if involvedSet(nrep) => (id, nrep) }
         // expandSubstringPairs, driver-side and keyed on rep ids: members
         // of the contained caption ↔ container rep and vice versa
-        val membersByRep = normCohortRows.groupBy(_._2)
-          .view.mapValues(_.map(_._1)).toMap
-        val subPairs = relations.flatMap { case (s, d) =>
-          val left = membersByRep.getOrElse(s, Nil).map(m => (m, d))
-          val right = membersByRep.getOrElse(d, Nil).map(m => (s, m))
-          (left ++ right).collect { case (a, b) if a != b =>
-            if (a <= b) (a, b) else (b, a)
-          }
-        }
-        touching(subPairs)
+        val membersByRep = normCohortRows.groupMap(_._2)(_._1)
+        touching(LocalCandidates.expandSubstring(relations,
+          membersByRep.getOrElse(_, Nil)))
       }
 
       val (exactNew, mhNew) = Await.result(fExactMh, 10.minutes)

@@ -156,8 +156,9 @@ object ConnectedComponents {
    * construction, so its CC never needs a cluster: a union-find here
    * replaces the per-round Spark jobs (join + agg + checkpoint + hash-sum)
    * with zero jobs. Union-by-min keeps the invariant shared with `run`:
-   * every component's label is its minimum member id. CcSpec pins
-   * runLocal == run on random graphs.
+   * every component's label is its minimum member id, in Spark's string
+   * order (`LocalCandidates.compareIds`). CcSpec pins runLocal == run on
+   * random graphs and on ids whose UTF-16 and UTF-8 orders disagree.
    */
   def runLocal(vertices: Seq[String],
       edges: Seq[(String, String)]): Map[String, String] = {
@@ -171,7 +172,10 @@ object ConnectedComponents {
     }
     edges.foreach { case (a, b) =>
       val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) {
+        if (graft.pairs.LocalCandidates.compareIds(ra, rb) < 0) parent(rb) = ra
+        else parent(ra) = rb
+      }
     }
     (vertices.iterator ++ edges.iterator.flatMap(e => Iterator(e._1, e._2)))
       .map(v => v -> find(v)).toMap

@@ -216,42 +216,6 @@ object Candidates {
     * over the size agg; the agg is persisted so no branch recomputes it. */
   private def nonSingletonKeys(banded: DataFrame,
       sizes: Option[DataFrame]): (DataFrame, Long) = {
-    // serving-path fast path: a cohort that already lives on the driver
-    // (the probe localizes every band cohort) gets its size map computed
-    // in Scala — the groupBy+count form below costs two cluster jobs
-    // (agg materialization + count action) of pure scheduling overhead at
-    // batch sizes. Same (band, bkey, m >= 2) contract, zero jobs.
-    if (sizes.isEmpty) {
-      banded.queryExecution.optimizedPlan match {
-        case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          val bi = lr.output.indexWhere(_.name == "band")
-          val ki = lr.output.indexWhere(_.name == "bkey")
-          // LocalRelation rows are INTERNAL (UTF8String etc.) — convert to
-          // external values so Row construction below round-trips any type
-          val bConv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToScalaConverter(lr.output(bi).dataType)
-          val kConv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToScalaConverter(lr.output(ki).dataType)
-          val counts = scala.collection.mutable.HashMap.empty[(Any, Any), Long]
-          lr.data.foreach { r =>
-            val key = (bConv(r.get(bi, lr.output(bi).dataType)),
-              kConv(r.get(ki, lr.output(ki).dataType)))
-            counts.update(key, counts.getOrElse(key, 0L) + 1L)
-          }
-          val spark = banded.sparkSession
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("band", lr.output(bi).dataType),
-            org.apache.spark.sql.types.StructField("bkey", lr.output(ki).dataType),
-            org.apache.spark.sql.types.StructField("m",
-              org.apache.spark.sql.types.LongType, nullable = false)))
-          val rows: Seq[org.apache.spark.sql.Row] = counts.iterator
-            .filter(_._2 >= 2L)
-            .map { case ((b, k), m) => org.apache.spark.sql.Row(b, k, m) }.toSeq
-          return (spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*), schema), rows.size.toLong)
-        case _ => ()
-      }
-    }
     val nonSingleton = graft.util.Caches.persist(
       sizes.getOrElse(
         banded
@@ -378,9 +342,12 @@ object Candidates {
 
   /** Per-phash representative map: (image_id, phash, prep). Persisted-free
     * helper — the incremental path rebuilds only affected slices of it.
-    * Window-free (see `repTag`): identical images are the canonical hot key. */
+    * Window-free (see `repTag`): identical images are the canonical hot key.
+    * A null phash is no key: such rows get no phash/simhash candidates, as
+    * in append and probe (whose phash joins drop nulls). */
   def phashRepMap(clean: DataFrame): DataFrame =
-    repTag(clean.select(col("image_id"), col("phash")), Seq("phash"), "image_id", "prep")
+    repTag(clean.where(col("phash").isNotNull).select(col("image_id"), col("phash")),
+      Seq("phash"), "image_id", "prep")
 
   /** SimHash combo-key projection of distinct phashes: (id, band, bkey). */
   def simhashBanded(distinctPh: DataFrame, cfg: DedupConfig): DataFrame =

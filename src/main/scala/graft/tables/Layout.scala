@@ -5,6 +5,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
@@ -104,26 +105,25 @@ object Layout {
   def isComplete(root: String, stage: String): Boolean =
     markerExists(manifestPath(root, stage))
 
+  /** The stage manifest as a JSON tree, when it exists and parses. */
+  private def manifest(root: String, stage: String): Option[JsonNode] =
+    markerRead(manifestPath(root, stage)).flatMap(m => Try(json.readTree(m)).toOption)
+
   /** Per-partition row counts recorded in the stage manifest — the north
     * rule's per-partition lineage/metrics, readable with zero Spark jobs. */
   def partitionRows(root: String, stage: String): Map[String, Long] =
-    markerRead(manifestPath(root, stage)).flatMap { m =>
-      """"partitions":\{([^}]*)\}""".r.findFirstMatchIn(m)
-        .map(_.group(1).split(",").filter(_.contains(":")).map { kv =>
-          val Array(k, v) = kv.split(":", 2)
-          k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toLong
-        }.toMap)
-    }.getOrElse(Map.empty)
+    manifest(root, stage).flatMap(m => Option(m.get("partitions")))
+      .map(_.properties().asScala.map(e => e.getKey -> e.getValue.asLong).toMap)
+      .getOrElse(Map.empty)
 
   /** Partition values (of the stage's partition column) recorded complete. */
   def completePartitions(root: String, stage: String): Set[String] =
     partitionRows(root, stage).keySet
 
-  /** Row count recorded in the stage manifest — zero Spark jobs. */
+  /** Row count recorded in the stage manifest (-1 when absent) — zero
+    * Spark jobs. */
   def manifestRows(root: String, stage: String): Long =
-    markerRead(manifestPath(root, stage))
-      .flatMap(""""rows":(\d+)""".r.findFirstMatchIn(_).map(_.group(1).toLong))
-      .getOrElse(-1L)
+    manifest(root, stage).flatMap(m => Option(m.get("rows"))).fold(-1L)(_.asLong)
 
   private def listParquetFiles(dir: String): Long = {
     val p = new Path(dir)
@@ -140,23 +140,24 @@ object Layout {
   private def writeManifest(root: String, stage: String, rows: Long,
       partitionBy: Seq[String], partitions: Map[String, Long],
       schema: String): Unit = {
-    val files = listParquetFiles(s"$root/$stage")
-    val pv = partitions.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val m = json.createObjectNode()
+    m.put("stage", stage).put("rows", rows).put("files", listParquetFiles(s"$root/$stage"))
+    m.set[JsonNode]("schema", json.readTree(schema))
+    val pb = m.putArray("partition_by")
+    partitionBy.foreach(p => pb.add(p))
+    val pv = m.putObject("partitions")
+    partitions.toSeq.sortBy(_._1).foreach { case (k, v) => pv.put(k, v) }
     // "v" is a per-write version token: content fields (rows/files/schema)
     // can round-trip unchanged through a mutation (Qa.refreshGlobal rewrites
     // clusters with identical counts; mergeStage preserves rows by
     // construction), and readers that cache stage frames (Probe's serving
     // context) compare raw manifest stamps to detect staleness — a stamp
     // that can repeat across mutations serves stale answers (ADVICE r5)
-    val manifest =
-      s"""{"stage":"$stage","rows":$rows,"files":$files,"schema":$schema,""" +
-        s""""partition_by":${partitionBy.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""partitions":$pv,"v":"${java.util.UUID.randomUUID}"}"""
-    markerWrite(manifestPath(root, stage), manifest)
+    m.put("v", java.util.UUID.randomUUID.toString)
+    markerWrite(manifestPath(root, stage), json.writeValueAsString(m))
   }
 
-  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val json = new ObjectMapper()
 
   /** The `"schema"` object of a manifest ("{}" when absent or unparsable),
     * read with a JSON parser so a nested object comes back whole. */
@@ -177,9 +178,11 @@ object Layout {
     StructType(data ++ partitionBy.map(p => parts.find(_.name == p).get))
   }.toOption
 
-  private def schemaJson(df: DataFrame): String =
-    df.schema.map(f => s""""${f.name}":"${f.dataType.simpleString}"""")
-      .mkString("{", ",", "}")
+  private def schemaJson(df: DataFrame): String = {
+    val o = json.createObjectNode()
+    df.schema.foreach(f => o.put(f.name, f.dataType.simpleString))
+    json.writeValueAsString(o)
+  }
 
   /** ONE-job checkpoint write: the row count is observed on the write job
     * itself. Returns the row count. */

@@ -170,4 +170,74 @@ class CandidatesSpec extends AnyFunSuite {
     assert(pairs.contains((phraseId, repId)),
       "a probe matching the repeated phrase at both offsets must still pair")
   }
+
+  /** Feature rows (the clean columns the generators read) for
+    * (image_id, caption, w, h, fmt, phash) inputs. */
+  private def clean(rows: Seq[(String, String, Int, Int, String, java.lang.Long)]) = {
+    import spark.implicits._
+    Dedup.features(rows.toDF("image_id", "caption", "w", "h", "fmt", "phash"),
+      DedupConfig.default).where(!col("is_low_quality")).repartition(3)
+  }
+
+  private def multiset(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String)] =
+    df.select("src", "dst", "source").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
+
+  test("driver-local candidates == distributed candidates (hot caption, resubmissions, repeated phrase)") {
+    val cfg = DedupConfig.default
+    // Synth rows carry the hot caption star (row 19 of every 20-row block)
+    val synth = (0L until 300L).map(graft.gen.Synth.makeRow(1L, _))
+      .map(r => (r.image_id, r.caption, r.w, r.h, r.fmt, java.lang.Long.valueOf(r.phash)))
+    // resubmitted copies of earlier rows under fresh, later ids
+    val resubs = (0 until 300 by 7).map { i =>
+      val r = synth(i); (f"img-9$i%09d", r._2, r._3, r._4, r._5, r._6)
+    }
+    // the repeated-phrase / hot-containment substring fixture, with phashes
+    // shared inside a caption group and a couple of near phashes across
+    val phrase = substringCaptions.map { case (id, norm) =>
+      (id, norm, 64, 48, "png", java.lang.Long.valueOf(norm.hashCode.toLong & 0xffffL))
+    }
+    for ((name, rows) <- Seq("synth+resubmissions" -> (synth ++ resubs),
+        "repeated phrase" -> phrase)) {
+      val c = clean(rows)
+      val (local, placedL) = Dedup.candidatesPlaced(c, cfg)
+      val (dist, placedD) = Dedup.candidatesPlaced(c, cfg, localRowCap = Some(0L))
+      assert(placedL == "local" && placedD == "distributed", name)
+      val (l, d) = (multiset(local), multiset(dist))
+      assert(l.map(_._3).distinct.size >= 3, s"$name: too few generators fire: ${l.groupBy(_._3).keys}")
+      assert(l == d, s"$name: local-only=${l.diff(d).take(5)} distributed-only=${d.diff(l).take(5)}")
+    }
+  }
+
+  test("driver-local candidates order ids as Spark does (code points, not UTF-16 units)") {
+    val cfg = DedupConfig.default
+    // "Ａ" (U+FF21) sorts before "😀" (U+1F600) in Spark's UTF-8 order and
+    // after it in UTF-16 order: every group's min-id rep and every pair's
+    // orientation depends on which order the twins use
+    val cap = "a photo of the quick brown fox jumping over the lazy dog at dawn"
+    val rows = Seq("Ａ", "😀", "a", "ｚ", "😀😀").zipWithIndex.flatMap { case (p, i) =>
+      Seq((s"$p-1", cap, 64, 48, "png", java.lang.Long.valueOf(7L)),
+        (s"$p-2", s"$cap near the river bank number $i", 64, 48, "png",
+          java.lang.Long.valueOf(7L + i)))
+    }
+    val c = clean(rows)
+    val (local, placed) = Dedup.candidatesPlaced(c, cfg)
+    assert(placed == "local")
+    val (l, d) = (multiset(local), multiset(Dedup.candidates(c, cfg)))
+    assert(l.exists(_._1 == "a-1") && l.exists(t => t._1 == "Ａ-1" && t._2.startsWith("😀")))
+    assert(l == d, s"local-only=${l.diff(d).take(5)} distributed-only=${d.diff(l).take(5)}")
+  }
+
+  test("a null phash is no key: two null-phash rows get no simhash candidate") {
+    val cfg = DedupConfig.default
+    val c = clean(Seq(
+      ("n-1", "a red bicycle leaning on a wall in the old town square", 64, 48, "png", null),
+      ("n-2", "a blue kettle on the stove in a small kitchen at night", 64, 48, "png", null),
+      ("n-3", "a green lamp on a desk beside a stack of old books", 64, 48, "png",
+        java.lang.Long.valueOf(5L))))
+    assert(multiset(Candidates.simhashPairs(c, cfg)).isEmpty)
+    val (local, placed) = Dedup.candidatesPlaced(c, cfg)
+    assert(placed == "local")
+    assert(!multiset(local).exists(_._3 == "simhash"))
+  }
 }

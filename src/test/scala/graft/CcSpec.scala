@@ -91,6 +91,21 @@ class CcSpec extends AnyFunSuite with ParallelTestExecution {
     }
   }
 
+  test("runLocal and runAdaptive label by Spark's string order, not UTF-16 order") {
+    import spark.implicits._
+    // "Ａ" (U+FF21) < "😀" (U+1F600) in code points (= Spark's UTF-8 byte
+    // order); UTF-16 puts the surrogate pair first
+    val edgeSeq = Seq(("😀-b", "Ａ-a"), ("Ａ-a", "ｚ-c"), ("😀😀", "😀-d"))
+    val ids = edgeSeq.flatMap(e => Seq(e._1, e._2)).distinct
+    val distributed = ConnectedComponents.run(ids.toDF("id"), edgeSeq.toDF("src", "dst"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(distributed("😀-b") == "Ａ-a" && distributed("😀😀") == "😀-d")
+    assert(ConnectedComponents.runLocal(ids, edgeSeq) == distributed)
+    val adaptive = ConnectedComponents.runAdaptive(ids.toDF("id"), edgeSeq.toDF("src", "dst"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(adaptive == distributed)
+  }
+
   test("pointer jumping is a no-op on star-shaped dedup graphs (same labels, same fixpoint)") {
     import spark.implicits._
     // two stars + a bridge, the generator shape: reps v-0000 and v-0100

@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,35 +16,6 @@ class LayoutSpec extends AnyFunSuite {
     if (Files.exists(dir))
       Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     root
-  }
-
-  /** Jobs `f` starts on this thread. Its jobs carry this thread's job group;
-    * a fence job run after `f` drains the asynchronous listener bus, which
-    * delivers events in order — and other suites' jobs carry other groups. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"layout-spec-${java.util.UUID.randomUUID}"
-    val seen = new AtomicInteger
-    val fence = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (g == group) seen.incrementAndGet()
-          else if (g == s"$group-fence") fence.countDown()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      f
-      sc.setJobGroup(s"$group-fence", "fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fence.await(120, TimeUnit.SECONDS), "listener bus did not drain")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    seen.get
   }
 
   test("manifest schema parser keeps a nested schema object whole") {
@@ -83,7 +51,7 @@ class LayoutSpec extends AnyFunSuite {
     Layout.runStage(spark, root, "t", Seq("batch"), Some("0"))(
       Seq(("a", 1L), ("b", 2L)).toDF("id", "x").withColumn("batch", lit("0")))
     var cols = Seq.empty[String]
-    assert(jobsOf { cols = Layout.read(spark, root, "t").columns.toSeq } == 0)
+    assert(SparkTestSession.jobsOf { cols = Layout.read(spark, root, "t").columns.toSeq }.isEmpty)
     assert(cols == Seq("id", "x", "batch"))
   }
 
@@ -115,5 +83,19 @@ class LayoutSpec extends AnyFunSuite {
     assert(Layout.read(spark, root, "low_quality").columns.last == "batch")
     assert(Layout.read(spark, root, "decisions").select(col("top_matches.match_id"))
       .as[Seq[String]].collect().toSet == Set(Seq("b", "c"), Seq.empty))
+  }
+
+  test("partition values with JSON syntax round-trip through the manifest") {
+    import spark.implicits._
+    val root = fresh("target/layout-spec-partvalues")
+    val odd = "a,b}\"c:1"
+    for (b <- Seq("0", odd))
+      Layout.runStagePartition(spark, root, "t", Seq("batch"), b)(
+        Seq(("x", 1L), ("y", 2L), ("z", 3L)).toDF("id", "v").where(col("v") <= (if (b == "0") 1 else 3))
+          .withColumn("batch", lit(b)))
+    assert(Layout.partitionRows(root, "t") == Map("0" -> 1L, odd -> 3L))
+    assert(Layout.completePartitions(root, "t") == Set("0", odd))
+    assert(Layout.manifestRows(root, "t") == 4L)
+    assert(Layout.readSchema(Layout.manifestStamp(root, "t")).isDefined)
   }
 }

@@ -66,9 +66,8 @@ class PlanSpec extends AnyFunSuite {
     // and carries the singleton filter (m >= 2) that keeps one-row buckets
     // out of the grid shuffle.
     import spark.implicits._
-    // repartition: a bare toDF Seq is a LocalRelation, which takes the
-    // serving path's driver-side size map (pinned separately below) — the
-    // DISTRIBUTED plan shape is what this test exists to pin
+    // repartition: the DISTRIBUTED plan shape over a scanned frame is what
+    // this test exists to pin
     val banded = (0 until 1000).map(i => (f"id$i%04d", i % 3, (i % 7).toLong))
       .toDF("id", "band", "bkey").repartition(4)
     val p = plan(Candidates.saltedSelfJoin(banded, 8))
@@ -78,8 +77,7 @@ class PlanSpec extends AnyFunSuite {
     val q21 = plan(graft.queries.Documents.q21NgramJaccard(spark, dir))
     assert(!q21.contains("Window"), "no df count window in q21")
 
-    // serving fast path: a LOCAL cohort's size map is computed on the
-    // driver (zero jobs) — same pair multiset as the distributed shape
+    // a LocalRelation cohort yields the same pair multiset
     val local = spark.createDataFrame(
       java.util.Arrays.asList(banded.collect(): _*), banded.schema)
     val localPairs = Candidates.saltedSelfJoin(local, 8)
@@ -214,5 +212,33 @@ class PlanSpec extends AnyFunSuite {
       val built = graft.tables.Layout.readSchema(graft.tables.Layout.manifestStamp(root, stage))
       assert(built.contains(spark.read.parquet(s"$root/$stage").schema), stage)
     }
+  }
+
+  test("a batch under the driver gate writes its candidates stage in at most 3 jobs") {
+    // one bounded key collect and the write of one LocalRelation; the
+    // distributed generators took about 35 jobs here
+    val corpusPath = "target/planspec-corpus"
+    if (!new java.io.File(s"$corpusPath/_SUCCESS").exists()) {
+      Synth.corpus(spark, 400).write.mode("overwrite").parquet(corpusPath)
+    }
+    val root = "target/planspec-candidate-jobs"
+    val rootDir = java.nio.file.Paths.get(root)
+    if (java.nio.file.Files.exists(rootDir))
+      java.nio.file.Files.walk(rootDir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
+    val jobs = SparkTestSession.jobsOf {
+      Dedup.runCheckpointed(spark, spark.read.parquet(corpusPath), root, DedupConfig.default)
+    }
+    val n = jobs.count(_ == "graft:candidates")
+    info(s"graft:candidates jobs: $n of ${jobs.size}")
+    assert(n >= 1 && n <= 3, s"$n candidates jobs")
+    // the gate's decision is a _metrics row: placement and clean row count
+    import spark.implicits._
+    val placement = spark.read.parquet(s"$root/_metrics")
+      .where(col("stage") === "candidates" && col("metric").startsWith("placement["))
+      .select("metric", "value").as[(String, Double)].collect().toSeq
+    val clean = graft.tables.Layout.manifestRows(root, "features") -
+      graft.tables.Layout.manifestRows(root, "low_quality")
+    assert(placement == Seq(("placement[local]", clean.toDouble)), placement)
   }
 }

@@ -109,6 +109,46 @@ class ResumeSpec extends AnyFunSuite with ParallelTestExecution {
     assert(lineage2.contains(("candidates/1", true)))
   }
 
+  test("append == full recompute on a batch with null phashes") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val rootInc = "target/resume-spec-nullphash"
+    val rootFull = "target/resume-spec-nullphash-full"
+    deleteRec(Paths.get(rootInc)); deleteRec(Paths.get(rootFull))
+    // every row whose id ends in 3 loses its phash, on both sides of the
+    // cut; the batch also resubmits two old null-phash rows under new ids
+    // (exact copies, null phash included) and copies a batch row
+    val base = Synth.corpus(spark, 200).toDF()
+      .withColumn("phash", when(col("image_id").endsWith("3"), lit(null).cast("long"))
+        .otherwise(col("phash")))
+    val copies = Seq("img-0000000003" -> "img-0000000900", "img-0000000013" -> "img-0000000901",
+        "img-0000000183" -> "img-0000000902")
+      .map { case (from, to) => base.where(col("image_id") === from).withColumn("image_id", lit(to)) }
+      .reduce(_ unionByName _)
+    val all = base.unionByName(copies)
+    val cut = f"img-${180}%010d"
+
+    Dedup.runCheckpointed(spark, all.where(col("image_id") < cut), rootInc, DedupConfig.default)
+    val inc = Incremental.append(spark, rootInc, all.where(col("image_id") >= cut), "1",
+      DedupConfig.default)
+    val full = Dedup.runCheckpointed(spark, all, rootFull, DedupConfig.default)
+
+    def pairSet(r: DedupResult) = r.verified
+      .select(col("src"), col("dst"), round(col("hybrid"), 6), col("is_edge"),
+        sort_array(col("sources")))
+      .collect().map(_.toSeq).toSet
+    val (a, b) = (pairSet(inc), pairSet(full))
+    assert(a == b, s"verified differ; inc-only=${(a -- b).take(5)} full-only=${(b -- a).take(5)}")
+    assert(a.exists(p => p(0) == "img-0000000003" && p(1) == "img-0000000900"),
+      "a resubmitted null-phash row pairs with its source")
+    assert(inc.clusters.as[(String, String)].collect().toSet ==
+      full.clusters.as[(String, String)].collect().toSet)
+    def decSet(r: DedupResult) = r.decisions
+      .select(col("image_id"), col("decision"), col("best_match_id"), col("cluster_id"))
+      .collect().map(_.toSeq).toSet
+    assert(decSet(inc) == decSet(full))
+  }
+
   test("incremental append merges two existing clusters through a bridging row") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One local session shared by all suites (scalatest runs suites in one JVM).
@@ -25,5 +29,36 @@ object SparkTestSession {
     graft.util.Sessions.build("graft-tests", "16",
       Map("spark.sql.shuffle.partitions" -> "8",
         "spark.local.dir" -> graft.util.Disk.ownLocalDir("test")))
+  }
+
+  /** Descriptions of the jobs `f` starts on this thread (null when a job
+    * has none). Its jobs carry this thread's job group; a fence job run
+    * after `f` drains the asynchronous listener bus, which delivers events
+    * in order — and other suites' jobs carry other groups. */
+  def jobsOf(f: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    val seen = new ConcurrentLinkedQueue[Option[String]]
+    val fence = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val g = p.getProperty("spark.jobGroup.id")
+          if (g == group) seen.add(Option(p.getProperty("spark.job.description")))
+          else if (g == s"$group-fence") fence.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      f
+      sc.setJobGroup(s"$group-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fence.await(120, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq.map(_.orNull)
   }
 }
