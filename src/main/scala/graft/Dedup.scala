@@ -102,8 +102,10 @@ object Dedup {
       }
     val spark = clean.sparkSession
     import spark.implicits._
+    // columns named by the case class: a renaming Project over a large
+    // LocalRelation would be evaluated row by row by the optimizer
     local.fold((candidates(clean, cfg), "distributed"))(c =>
-      (c.toDF("src", "dst", "source"), "local"))
+      (spark.createDataset(c).toDF(), "local"))
   }
 
   def decisions(clean: DataFrame, edges: DataFrame, clusters: DataFrame,
@@ -248,6 +250,9 @@ object Dedup {
   /** In-memory run (tests, small inputs). */
   def run(spark: SparkSession, input: DataFrame, cfg: DedupConfig = DedupConfig.default): DedupResult = {
     val feats = features(input, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    // fill the cache one task per partition: the candidates gate's bounded
+    // collect runs in ONE task and would otherwise project every feature
+    feats.count()
     val clean = feats.where(!col("is_low_quality"))
     val lowQ = feats.where(col("is_low_quality"))
       .select("image_id", "caption", "issues", "quality_score", "quality_severity")

@@ -114,7 +114,10 @@ object ConnectedComponents {
     * default). Same count-gated philosophy as `Candidates.FilterKeyCap`:
     * the gate is MEASURED (one bounded limit-collect), never guessed, and
     * past it the honest distributed asymptote stands — at 10^12 rows the
-    * edge set is corpus-shaped and no driver holds it. 0 disables. */
+    * edge set is corpus-shaped and no driver holds it. 0 disables. The
+    * same budget gates the pipeline's driver-side candidates
+    * (`LocalCandidates.rowCap` and its pair count), so
+    * `GRAFT_CC_LOCAL_CAP` moves both gates. */
   val LocalEdgeCap: Long =
     sys.env.get("GRAFT_CC_LOCAL_CAP").map(_.toLong).getOrElse(1000000L)
 

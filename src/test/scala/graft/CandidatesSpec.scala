@@ -183,11 +183,16 @@ class CandidatesSpec extends AnyFunSuite {
     df.select("src", "dst", "source").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
 
+  private type KeyRow = (String, String, Int, Int, String, java.lang.Long)
+
+  private def synthRows(n: Int, seed: Long): Seq[KeyRow] =
+    (0L until n.toLong).map(graft.gen.Synth.makeRow(seed, _))
+      .map(r => (r.image_id, r.caption, r.w, r.h, r.fmt, java.lang.Long.valueOf(r.phash)))
+
   test("driver-local candidates == distributed candidates (hot caption, resubmissions, repeated phrase)") {
     val cfg = DedupConfig.default
     // Synth rows carry the hot caption star (row 19 of every 20-row block)
-    val synth = (0L until 300L).map(graft.gen.Synth.makeRow(1L, _))
-      .map(r => (r.image_id, r.caption, r.w, r.h, r.fmt, java.lang.Long.valueOf(r.phash)))
+    val synth = synthRows(300, 1L)
     // resubmitted copies of earlier rows under fresh, later ids
     val resubs = (0 until 300 by 7).map { i =>
       val r = synth(i); (f"img-9$i%09d", r._2, r._3, r._4, r._5, r._6)
@@ -197,8 +202,39 @@ class CandidatesSpec extends AnyFunSuite {
     val phrase = substringCaptions.map { case (id, norm) =>
       (id, norm, 64, 48, "png", java.lang.Long.valueOf(norm.hashCode.toLong & 0xffffL))
     }
-    for ((name, rows) <- Seq("synth+resubmissions" -> (synth ++ resubs),
-        "repeated phrase" -> phrase)) {
+    // the end-to-end suites' corpora, which are all under the gate, so their
+    // Dedup.run / runCheckpointed calls take the driver side: ResumeSpec's
+    // null-phash batch (ids ending in 3 lose their phash, three copied under
+    // new ids) and bridging row, ProbeSpec's corpus with its two unseen
+    // byte-identical rows
+    val nullPhash = {
+      val base = synthRows(200, graft.gen.Synth.DefaultSeed)
+        .map(r => if (r._1.endsWith("3")) r.copy(_6 = null) else r)
+      base ++ Seq(3 -> 900, 13 -> 901, 183 -> 902)
+        .map { case (from, to) => base(from).copy(_1 = f"img-$to%010d") }
+    }
+    val capA = "unique alpha beta gamma delta epsilon zeta caption body"
+    val capB = "distinct one two three four five six seven caption tail"
+    val bridge = synthRows(60, graft.gen.Synth.DefaultSeed) ++ Seq(
+      ("img-0000000700", capA, 64, 64, "png", java.lang.Long.valueOf(0x123456789ABCDEF0L)),
+      ("img-0000000701", capB, 64, 64, "png", java.lang.Long.valueOf(0x0FEDCBA987654321L)),
+      ("img-0000000800", s"$capA $capB", 64, 64, "png", java.lang.Long.valueOf(0x5555AAAA3333CCCCL)))
+    val probe = {
+      val base = synthRows(480, graft.gen.Synth.DefaultSeed)
+      val unseen = "zyqqat florblex umbrine quavitol dresken marlowex vintagra koomzel"
+      base ++ Seq("img-zzzzzz0001", "img-zzzzzz0002")
+        .map(id => base(400).copy(_1 = id, _2 = unseen, _6 = java.lang.Long.valueOf(0x5AC3F00D12345678L)))
+    }
+    val corpora = Seq("synth+resubmissions" -> (synth ++ resubs), "repeated phrase" -> phrase,
+        "null phashes" -> nullPhash, "bridging row" -> bridge, "probe corpus" -> probe) ++
+      (for (n <- Seq(300, 1000, 2000); seed <- Seq(1L, 2L, 7L))
+        yield s"synth $n seed $seed" -> synthRows(n, seed))
+    // each distributed side is ~35 scheduling-bound jobs: three corpora at a
+    // time overlap their driver floors
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val checks = corpora.map { case (name, rows) => scala.concurrent.Future {
       val c = clean(rows)
       val (local, placedL) = Dedup.candidatesPlaced(c, cfg)
       val (dist, placedD) = Dedup.candidatesPlaced(c, cfg, localRowCap = Some(0L))
@@ -206,7 +242,28 @@ class CandidatesSpec extends AnyFunSuite {
       val (l, d) = (multiset(local), multiset(dist))
       assert(l.map(_._3).distinct.size >= 3, s"$name: too few generators fire: ${l.groupBy(_._3).keys}")
       assert(l == d, s"$name: local-only=${l.diff(d).take(5)} distributed-only=${d.diff(l).take(5)}")
-    }
+    }}
+    try scala.concurrent.Await.result(scala.concurrent.Future.sequence(checks),
+      scala.concurrent.duration.Duration(20, "min"))
+    finally pool.shutdown()
+  }
+
+  test("a batch whose pair volume passes the driver budget runs the distributed generators") {
+    val cfg = DedupConfig.default
+    // 260 rows under the row gate: one caption at 260 sizes, so 260 exact
+    // groups whose reps share all minhash bands, 32 * C(260, 2) = 1,076,640
+    // bucket pairs > LocalEdgeCap; the twins count them and build none
+    val cap = "a photo of the quick brown fox jumping over the lazy dog at dawn"
+    val rows = (0 until 260).map(i =>
+      (f"w-$i%04d", cap, 64 + i, 48, "png", java.lang.Long.valueOf(i.toLong * 0x9E3779B97F4A7C15L)))
+    val c = clean(rows)
+    val keyRows = c.select(graft.pairs.LocalCandidates.KeyCols.map(col): _*).collect().toSeq
+    assert(keyRows.size == 260 && keyRows.size <= graft.pairs.LocalCandidates.rowCap(cfg))
+    assert(graft.pairs.LocalCandidates.candidates(keyRows, cfg).isEmpty)
+    // the frame handed back is then Dedup.candidates' own plan, so its
+    // multiset is the distributed one (planned here, not run)
+    val (_, placed) = Dedup.candidatesPlaced(c, cfg)
+    assert(placed == "distributed")
   }
 
   test("driver-local candidates order ids as Spark does (code points, not UTF-16 units)") {
