@@ -343,7 +343,8 @@ object Dedup {
     Layout.runStage(spark, root, "duplicate_history", batchCol, base)(
       duplicateHistory(decis, verified))
 
-    writeRunMetrics(spark, root, decis, lowQ, clusters, placement)
+    writeRunMetrics(spark, root, decis, lowQ, clusters, placement.map(p => (p,
+      Layout.manifestRows(root, "features") - Layout.manifestRows(root, "low_quality"))))
     DedupResult(clean, lowQ, cands, verified, clusters, decis, recur, audit)
   }
 
@@ -357,13 +358,13 @@ object Dedup {
    *    cluster-size histogram (`monitoring.py:216-258`, dashboards) — two
    *    small jobs over the stage files;
    *  - row counts and per-batch-partition rows straight from the stage
-   *    manifests (no jobs), and — when this run computed the candidates
-   *    stage — its placement, `placement[local|distributed]` with the clean
-   *    row count as value; then buffered lineage flushes in one append.
+   *    manifests (no jobs), and — when this run computed candidates — their
+   *    placement, `placement[local|distributed]`, valued with the clean
+   *    rows it placed; then buffered lineage flushes in one append.
    */
   private[graft] def writeRunMetrics(spark: SparkSession, root: String,
       decis: DataFrame, lowQ: DataFrame, clusters: DataFrame,
-      placement: Option[String] = None): Unit = {
+      placement: Option[(String, Long)] = None): Unit = {
     val batchCol =
       if (decis.columns.contains("batch")) col("batch") else lit(BaseBatch)
     // ONE collect job for all three aggregate families (decision counts +
@@ -405,8 +406,9 @@ object Dedup {
       .map(r => ("low_quality", s"issue[${r.getString(1)}]", r.getDouble(3)))
     val histRows = all.filter(_.getString(0) == "hist").toSeq
       .map(r => ("clusters", s"size[${r.getString(1)}]", r.getDouble(3)))
-    val placementRow = placement.map(p => ("candidates", s"placement[$p]",
-      (Layout.manifestRows(root, "features") - Layout.manifestRows(root, "low_quality")).toDouble))
+    val placementRow = placement.map { case (p, rows) =>
+      ("candidates", s"placement[$p]", rows.toDouble)
+    }
     Layout.appendMetrics(spark, root, placementRow.toSeq ++ Seq(
       ("candidates", "pairs", Layout.manifestRows(root, "candidates").toDouble),
       ("clusters", "rows", Layout.manifestRows(root, "clusters").toDouble)) ++

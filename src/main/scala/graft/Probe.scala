@@ -6,8 +6,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.cluster.ConnectedComponents
 import graft.config.DedupConfig
-import graft.pairs.{Candidates, LocalCandidates, PairVerifier}
-import graft.sig.SuffixDup
+import graft.pairs.{Cohort, PairVerifier}
 import graft.tables.Layout
 
 /**
@@ -59,26 +58,26 @@ final case class ProbeResult(decisions: DataFrame, lowQuality: DataFrame) {
  *     rebuilds the context on the next call.
  *  2. Probe plans execute under probe-scoped conf: shuffle.partitions
  *     dropped to `ProbePartitions` (everything that shuffles is
- *     batch-proportional BY DESIGN — the corpus is only ever scan-filtered
- *     against broadcast batch keys — so corpus-sized partition counts just
- *     multiply empty-task scheduling), and AQE off (re-optimization is a
+ *     batch-proportional BY DESIGN — the index is only ever scanned with
+ *     the batch's keys — so corpus-sized partition counts just multiply
+ *     empty-task scheduling), and AQE off (re-optimization is a
  *     driver sync per shuffle stage; probe shuffles are too small to ever
  *     re-plan profitably). The session conf is restored before returning;
  *     the result frames are already materialized by then.
  *  3. Everything batch-sized lives on the DRIVER as LocalRelations
- *     (`local`), cluster jobs run only at the index-cohort boundaries
- *     (cached stage ⋈ broadcast batch keys, re-localized immediately), and
- *     the quotient CC is a driver union-find
- *     (`ConnectedComponents.runLocal`). Serving latency is a job-count
- *     floor: the localCheckpoint form of this path cost 56 sequential
- *     jobs ≈ 19–23 s warm per 1k batch; the localized form cuts the job
- *     count to the ~15 cohort fetches.
+ *     (`local`), and the quotient CC is a driver union-find
+ *     (`ConnectedComponents.runLocal`). Candidates are append's own cohort
+ *     (`Cohort.run`) over the cached index: its fetches are the cluster
+ *     jobs, each bringing key-filtered index rows to the driver. Serving
+ *     latency is a job-count floor: the localCheckpoint form of this path
+ *     cost 56 sequential jobs ≈ 19–23 s warm per 1k batch; the localized
+ *     form cuts it to about 20.
  *
- * Scale shape is append's: the probe batch is the small side, so its keys
- * broadcast; persisted index stages (rep_map / norm_map / banded /
- * banded_simhash / suffix_keys) are only ever SCANNED and filtered against
- * those broadcast keys — the corpus never shuffles. Per-probe-batch work is
- * proportional to the batch and the band buckets / components it touches.
+ * Scale shape is append's: the persisted index stages (rep_map / norm_map /
+ * banded / banded_simhash / suffix_keys) are scanned with the batch's keys
+ * and the corpus never shuffles while the cohort fits the driver budget.
+ * Per-probe-batch work is proportional to the batch and the band buckets /
+ * components it touches.
  *
  * Assumes probe ids are unseen and sort after the corpus ids (arrival
  * order — the same invariant append requires). Probe rows DO see each other
@@ -88,22 +87,17 @@ final case class ProbeResult(decisions: DataFrame, lowQuality: DataFrame) {
 object Probe {
 
   /** Shuffle partitions for probe plans. Everything that shuffles is
-    * batch-proportional (the corpus is only ever scan-filtered against
-    * broadcast batch keys), so a corpus-sized count just multiplies empty
-    * tasks. Measured on the 1k-batch serving shape: 1 beats 8 (6.5 s vs
-    * 8.0 s median) once the heavy batch-local derivations run inside the
-    * concurrent chains — per-stage task floors dominate intra-job
-    * parallelism at this size. */
+    * batch-proportional (the index is only ever scanned with the batch's
+    * keys), so a corpus-sized count just multiplies empty tasks. Measured
+    * on the 1k-batch serving shape: 1 beats 8 (6.5 s vs 8.0 s median) once
+    * the heavy batch-local derivations run inside the concurrent chains —
+    * per-stage task floors dominate intra-job parallelism at this size. */
   val ProbePartitions = "1"
 
-  /** The persisted index stages, cached for repeated probes, plus the
-    * manifest stamps they were loaded under. */
-  private final case class Index(
-      oldClean: DataFrame, oldGroupReps: DataFrame, oldNormReps: DataFrame,
-      normMapAll: DataFrame, banded: DataFrame, bandedSim: DataFrame,
-      suffixJoined: DataFrame, oldProbes: DataFrame, clustersPrev: DataFrame) {
-    def frames: Seq[DataFrame] = Seq(oldClean, oldGroupReps, oldNormReps,
-      normMapAll, banded, bandedSim, suffixJoined, oldProbes, clustersPrev)
+  /** The persisted index stages, cached for repeated probes: the cohort's
+    * index and the clusters table. */
+  private final case class Index(cohort: Cohort.Index, clustersPrev: DataFrame) {
+    def frames: Seq[DataFrame] = cohort.frames :+ clustersPrev
   }
 
   /** Stages whose manifests stamp the context (any mutation path rewrites
@@ -119,7 +113,9 @@ object Probe {
       val cfg: DedupConfig, idx: Index, stampAtOpen: String) {
     private[Probe] def index: Index = idx
     private[Probe] def fresh: Boolean = stamp(root) == stampAtOpen
-    def probe(input: DataFrame): ProbeResult = evaluate(this, input)
+    def probe(input: DataFrame,
+        cohortBudget: Long = ConnectedComponents.LocalEdgeCap): ProbeResult =
+      evaluate(this, input, cohortBudget)
     def close(): Unit = idx.frames.foreach(_.unpersist(false))
   }
 
@@ -150,40 +146,11 @@ object Probe {
 
   private def buildIndex(spark: SparkSession, root: String, cfg: DedupConfig,
       cached: DataFrame => DataFrame): Context = {
-    val idx = Index(
-      oldClean = cached(Layout.read(spark, root, "features")
-        .where(!col("is_low_quality")).drop("batch")),
-      oldGroupReps = cached(Layout.read(spark, root, "rep_map")
-        .where(col("image_id") === col("rep"))
-        .select(Candidates.ExactKeyCols.map(col) :+ col("rep"): _*)),
-      oldNormReps = cached(Layout.read(spark, root, "norm_map")
-        .where(col("image_id") === col("nrep")).select("norm", "nrep")),
-      normMapAll = cached(Layout.read(spark, root, "norm_map")
-        .select("image_id", "norm", "nrep")),
-      banded = cached(Layout.read(spark, root, "banded")
-        .select("id", "band", "bkey")),
-      bandedSim = cached(Layout.read(spark, root, "banded_simhash")
-        .select("id", "band", "bkey")),
-      // suffix index PRE-JOINED with its reps' caption text: the per-probe
-      // suffix cohort is then a pure broadcast-filter scan instead of a
-      // (suffix_keys ⋈ norm reps) shuffle join per call — the join runs once
-      // here, at load time (the "build the serving index up front" move).
-      // The old-build × new-probe cross terms on b_id are empty by the
-      // unseen-ids contract, so old⋈old via this frame plus local new⋈new
-      // covers the full union join append computes.
-      suffixJoined = cached(Layout.read(spark, root, "suffix_keys")
-        .select("b_id", "tier", "k")
-        .join(Layout.read(spark, root, "norm_map")
-          .where(col("image_id") === col("nrep"))
-          .select(col("nrep").as("b_id"), col("norm").as("b_norm")), Seq("b_id"))
-        .select("b_id", "b_norm", "tier", "k")),
-      // old norm reps' probe entries, precomputed (filter+hash per row is
-      // cheap but pays a full norm_map pass per probe otherwise)
-      oldProbes = cached(SuffixDup.probeEntries(
-        Layout.read(spark, root, "norm_map")
-          .where(col("image_id") === col("nrep"))
-          .select(col("nrep").as("id"), col("norm")), cfg)),
-      clustersPrev = cached(Layout.read(spark, root, "clusters")))
+    // the suffix index is cached PRE-JOINED with its reps' caption text
+    // (`Cohort.Index.suffixBuilds`): the join runs once, at load time, and
+    // each probe's suffix fetch is a filtered scan of the cached rows
+    val idx = Index(Cohort.Index.of(Layout.read(spark, root, _), cfg, cached),
+      cached(Layout.read(spark, root, "clusters")))
     new Context(spark, root, cfg, idx, stamp(root))
   }
 
@@ -205,7 +172,8 @@ object Probe {
   /** Evaluate `input` read-only against `root`, reusing (or transparently
     * rebuilding) the cached serving context. */
   def run(spark: SparkSession, root: String, input: DataFrame,
-      cfg: DedupConfig = DedupConfig.default): ProbeResult = {
+      cfg: DedupConfig = DedupConfig.default,
+      cohortBudget: Long = ConnectedComponents.LocalEdgeCap): ProbeResult = {
     // The quotient path composes with the PERSISTED clusters table; a QA
     // override recorded after the last global derivation (forceLink without
     // refreshGlobal) is invisible to it, so probe answers would diverge
@@ -226,7 +194,7 @@ object Probe {
           c
       }
     }
-    ctx.probe(input)
+    ctx.probe(input, cohortBudget)
   }
 
   /** Set probe-scoped session conf, restore on exit. The result frames are
@@ -261,15 +229,6 @@ object Probe {
     * every broadcast subtree and CC round was its own driver-coordinated
     * job), so the probe plan is cut at each index-cohort boundary and
     * everything batch-sized lives on the driver. */
-  // fixed pool for the concurrent candidate chains — 3 outer chains plus
-  // the suffix chain's 2 nested sub-chains (nested futures must never wait
-  // on their own parent's thread). Daemon threads so an idle serving
-  // process never blocks JVM exit.
-  private lazy val probeEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(5,
-        (r: Runnable) => { val t = new Thread(r, "probe-branch"); t.setDaemon(true); t }))
-
   private def local(spark: SparkSession, df: DataFrame, label: String): DataFrame = {
     val sc = spark.sparkContext
     sc.setJobDescription(s"probe:$label")
@@ -277,7 +236,7 @@ object Probe {
     finally sc.setJobDescription(null)
   }
 
-  private def evaluate(ctx: Context, input: DataFrame): ProbeResult =
+  private def evaluate(ctx: Context, input: DataFrame, cohortBudget: Long): ProbeResult =
     withProbeConf(ctx.spark) {
       val spark = ctx.spark
       val cfg = ctx.cfg
@@ -285,287 +244,28 @@ object Probe {
       val idx = ctx.index
       import spark.implicits._
       def L(label: String)(df: DataFrame): DataFrame = local(spark, df, label)
-      // distinct projection of a LOCAL frame, deduplicated on the driver:
-      // collecting a projection over a LocalRelation is free (the optimizer
-      // folds it), the Scala distinct costs no job, and every consumer —
-      // broadcast hints especially — sees a plain LocalRelation instead of
-      // re-running an Aggregate subtree once per consuming query
-      def dl(df: DataFrame): DataFrame = spark.createDataFrame(
-        java.util.Arrays.asList(df.collect().distinct: _*), df.schema)
-      // Literal-IN prefilter under a cohort join: probing a corpus-wide
-      // cached scan through a broadcast-hash join measured ~3x the cost of
-      // a codegen'd InSet filter over the same rows (1.2 s vs 0.45 s on the
-      // 6.4M-row simhash index) — so each cohort fetch filters the scan
-      // with the touched keys as literals FIRST, and the exact equi-join
-      // runs over the near-cohort-sized survivors. Collect of a dl frame
-      // is free (LocalRelation). CAPPED: analyzer cost over an In's child
-      // list is superlinear (a 5k-row batch's ~80k band keys drove one
-      // probe rep to 155 s of pure driver planning), so past the cap the
-      // plain broadcast join — whose cost is flat in key count — stands
-      // alone. Serving batches are interactive-sized; the cap covers them.
-      val inFilterKeyCap = 32 * 1024
-      def prefiltered(scan: DataFrame, c: String, local: DataFrame): DataFrame = {
-        val ks = local.select(c).collect().map(_.get(0)).distinct.toSeq
-        if (ks.sizeIs <= inFilterKeyCap) scan.where(col(c).isin(ks: _*)) else scan
-      }
-      // Single-key cohort filter: for a DISTINCT key set, the inner join
-      // against the key frame is a pure semi-join — the InSet filter IS the
-      // fetch, and dropping the join drops the broadcast-exchange build job
-      // Spark submits per broadcast-hash join even for a LocalRelation
-      // build side (measured with tools.ProbeJobProbe: scan ⋈
-      // broadcast(local) = 2 jobs, scan.where(isin) = 1). Past the cap the
-      // broadcast-join fallback stands (flat planning cost in key count).
-      def keyFiltered(scan: DataFrame, c: String, keys: Seq[Any],
-          keysDf: => DataFrame): DataFrame =
-        if (keys.isEmpty) scan.where(lit(false))
-        else if (keys.sizeIs <= inFilterKeyCap) scan.where(col(c).isin(keys: _*))
-        else scan.join(broadcast(keysDf), Seq(c))
 
       // One decode+fingerprint pass over the batch, then the rows live on
-      // the driver: every batch-local DERIVATION below runs in driver Scala
-      // (the spec-pinned `LocalCandidates` twins), and only joins against
-      // the cached index stages (each immediately re-localized — the
-      // results are cohort-sized) run as cluster jobs. Column-level logic
-      // is IDENTICAL to append's — the same primitives over the same
-      // shapes, only the physical placement changes (ProbeSpec's
-      // byte-parity contract is the regression net).
+      // the driver; filters/projections of a LocalRelation fold at
+      // optimization time — these collects are driver-only, no job
       val feats = L("feats")(Dedup.features(input, cfg))
       val cleanNew = feats.where(!col("is_low_quality"))
-      // filters/projections of a LocalRelation fold at optimization time —
-      // these collects are driver-only, no job
       val lowQ = L("lowQ")(feats.where(col("is_low_quality"))
         .select("image_id", "caption", "issues", "quality_score", "quality_severity")
         .withColumn("status", lit(graft.qa.Qa.Pending)))
-      val oldClean = idx.oldClean
-      val cleanRows = cleanNew
-        .select("image_id", "norm", "w", "h", "fmt", "phash", "shingles").collect()
-      val newIdSeq = cleanRows.map(_.getString(0)).toSeq
+      val newIdSeq = cleanNew.select("image_id").collect().map(_.getString(0)).toSeq
       val newIdSet = newIdSeq.toSet
-      def touching(pairs: Seq[(String, String)]): Seq[(String, String)] =
-        pairs.filter(p => newIdSet.contains(p._1) || newIdSet.contains(p._2))
 
-      // ---- candidate generation: three independent index-fetch chains ----
-      // The exact/minhash chain, the phash/simhash chain, and the norm/
-      // suffix chain (append steps 2-5, same values) share no data until the
-      // candidate union, so their cohort fetches run CONCURRENTLY (Spark
-      // schedules jobs from any thread; the probe-scoped session conf is
-      // fixed for the whole scope). The serving wall for this section is
-      // the longest chain, not the sum of the three.
+      // ---- candidates: append's cohort over the cached index, no writes ----
+      // (a LocalRelation on the driver side: localizing it is a free copy)
+      val candsNew = L("cands")(
+        Cohort.run(spark, idx.cohort, cleanNew, cfg, "probe:", cohortBudget).candidates)
+      val candRows = candsNew.collect()
+      implicit val ec: scala.concurrent.ExecutionContext = Cohort.pool
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.DurationInt
-      implicit val ec: scala.concurrent.ExecutionContext = probeEc
 
-      val keyCols = Candidates.ExactKeyCols
-
-      // exact groups + minhash bands
-      val fExactMh = Future {
-        val newKeyed = cleanNew.select((Seq("image_id") ++ keyCols).map(col): _*)
-        // the ONE cluster fetch of this chain head: the rep cohort join
-        // keys on multiple columns (no single-column literal prefilter
-        // applies), so the group index is probed by broadcast join —
-        // null-safe, as the rep map groups null keys together
-        val matchedRows = L("matched")(
-          idx.oldGroupReps.join(broadcast(newKeyed),
-            keyCols.map(k => idx.oldGroupReps(k) <=> newKeyed(k)).reduce(_ && _))
-            .select(col("image_id"), col("rep"))).collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap
-        // unmatched rows rep-tag among themselves (driver group-min — the
-        // same min-id-per-key repTag computes)
-        val unmatchedTag = LocalCandidates.repTag(
-          cleanRows.toSeq.filterNot(r => matchedRows.contains(r.getString(0)))
-            .map(r => r.getString(0) ->
-              ((r.get(1), r.get(2), r.get(3), r.get(4), r.get(5)))))
-        val repOf: Map[String, String] = matchedRows ++ unmatchedTag
-        val newRepIds = repOf.collect { case (id, rep) if id == rep => id }.toSet
-        val exactNew = repOf.toSeq.collect {
-          case (id, rep) if id != rep => (rep, id)
-        }
-        // banding of the new reps: driver Scala over the batch's shingles
-        val bandedNew = LocalCandidates.minhashBanded(
-          cleanRows.toSeq.filter(r => newRepIds.contains(r.getString(0)))
-            .map(r => r.getString(0) ->
-              (if (r.isNullAt(6)) null else r.getSeq[Long](6))), cfg)
-        val affectedBands = bandedNew.map(r => (r._2, r._3)).distinct
-        val affectedSet = affectedBands.toSet
-        // bkey-only fetch (exact (band,bkey) membership restored by the
-        // driver-side filter — InSet false hits are dropped there)
-        val cohortRows =
-          if (affectedBands.isEmpty) Seq.empty[(String, Int, Long)]
-          else L("bandCohort")(
-            keyFiltered(idx.banded, "bkey", affectedBands.map(_._2).distinct,
-              affectedBands.map(_._2).distinct.toDF("bkey"))
-              .select("id", "band", "bkey")).collect()
-            .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-            .filter(r => affectedSet.contains((r._2, r._3))).toSeq
-        // pair emission over the localized cohort is driver work now
-        val mhNew = touching(LocalCandidates.bucketPairs(cohortRows ++ bandedNew))
-        (exactNew, mhNew)
-      }
-
-      // phash groups + simhash bands
-      val fSim = Future {
-        // a row with a null phash gets no phash/simhash candidates
-        val phNew = cleanRows.toSeq.filterNot(_.isNullAt(5))
-          .map(r => (r.getString(0), r.getLong(5)))
-        val phNewVals = phNew.map(_._2).distinct
-        // one cluster fetch serves both: old members of touched phashes
-        // (for prepPh) and the present-in-corpus phash set
-        val phOldCohort = L("phOldCohort")(
-          keyFiltered(oldClean.select(col("image_id"), col("phash")),
-            "phash", phNewVals, phNewVals.toDF("phash"))
-            .select("image_id", "phash")).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSeq
-        val presentOld = phOldCohort.map(_._2).toSet
-        // min image_id per touched phash over old cohort + batch rows
-        val prepOf = LocalCandidates.repTag(phOldCohort ++ phNew)
-        val samePhashNew = phNew.collect {
-          case (id, _) if id != prepOf(id) => (prepOf(id), id)
-        }
-        // reps of the batch's phashes the corpus has not seen
-        val newPhReps = {
-          val unseen = phNew.filterNot(p => presentOld.contains(p._2))
-          val rep = LocalCandidates.repTag(unseen)
-          unseen.filter(p => rep(p._1) == p._1)
-        }
-        val newPhRepIds = newPhReps.map(_._1).toSet
-        val simBandedNew = LocalCandidates.simhashBanded(newPhReps, cfg)
-        val affectedCombos = simBandedNew.map(r => (r._2, r._3)).distinct
-        val comboSet = affectedCombos.toSet
-        val simCohortRows =
-          if (affectedCombos.isEmpty) Seq.empty[(String, Int, Long)]
-          else L("simCohort")(
-            keyFiltered(idx.bandedSim, "bkey", affectedCombos.map(_._2).distinct,
-              affectedCombos.map(_._2).distinct.toDF("bkey"))
-              .select("id", "band", "bkey")).collect()
-            .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-            .filter(r => comboSet.contains((r._2, r._3))).toSeq
-        val simBandNew = LocalCandidates.bucketPairs(simCohortRows ++ simBandedNew)
-          .filter(p => newPhRepIds.contains(p._1) || newPhRepIds.contains(p._2))
-        samePhashNew ++ simBandNew
-      }
-
-      // norm groups + suffix pass
-      val fSub = Future {
-        val newNorms = cleanRows.toSeq.map(r => (r.getString(0), r.getString(1)))
-        val touchedNormSet = newNorms.map(_._2).distinct
-        // ONE fetch serves both consumers that keyed on the same norm set:
-        // the old rep per touched norm (norm-group matching) AND the old
-        // reps participating in touched-caption containment
-        val oldNormCohort = L("normRepCohort")(
-          keyFiltered(idx.oldNormReps, "norm", touchedNormSet,
-            touchedNormSet.toDF("norm"))
-            .select("norm", "nrep")).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSeq
-        val oldRepByNorm = oldNormCohort.toMap
-        val unmatchedTag = LocalCandidates.repTag(
-          newNorms.filterNot(r => oldRepByNorm.contains(r._2)))
-        val normNewRows = newNorms.map { case (id, norm) =>
-          (id, norm, oldRepByNorm.getOrElse(norm, unmatchedTag(id)))
-        }
-        val normNewReps = normNewRows.collect {
-          case (id, norm, nrep) if id == nrep => (id, norm)
-        }.distinct
-        val touchedRepsOld = oldNormCohort.map(p => (p._2, p._1))
-        val touchedReps = touchedRepsOld ++ normNewReps
-        // the new-probes-vs-old-builds chain (r1) and the old-probes-vs-
-        // new-builds chain (r2) share only touchedReps (already resolved
-        // here) — their fused fetch+verify jobs overlap
-        val probesNew = LocalCandidates.probeEntries(touchedReps, cfg)
-        val buildsNew = LocalCandidates.suffixEntries(touchedReps)
-        val suffixSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("b_id",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("b_norm",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("tier",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.LongType)))
-        def suffixDf(rows: Seq[(String, String, Int, Long)],
-            aSide: Boolean): DataFrame = {
-          val rs: Seq[org.apache.spark.sql.Row] =
-            rows.map(t => org.apache.spark.sql.Row(t._1, t._2, t._3, t._4))
-          val base = spark.createDataFrame(
-            java.util.Arrays.asList(rs: _*), suffixSchema)
-          if (aSide) base.select(col("b_id").as("a_id"),
-            col("b_norm").as("a_norm"), col("tier"), col("k"))
-          else base
-        }
-        // (tier, k) cohort filter: with a single prefix tier (Tiers.size
-        // == 1, the shipped ladder) the k-only InSet IS the exact (tier,k)
-        // membership test, so the fused fetch+verify jobs lose their
-        // broadcast-exchange build jobs too; a multi-tier ladder falls
-        // back to the join
-        def tierKFiltered(scan: DataFrame, tk: Seq[(Int, Long)]): DataFrame =
-          if (SuffixDup.Tiers.sizeIs == 1 && tk.sizeIs <= inFilterKeyCap)
-            scan.where(col("k").isin(tk.map(_._2).distinct: _*))
-          else scan.join(broadcast(tk.toDF("tier", "k")), Seq("tier", "k"))
-        val fR1 = Future {
-          val probeTierKSet = probesNew.map(t => (t._3, t._4)).distinct
-          // old builds: pre-joined serving index, broadcast-filter scan
-          // only; new builds: local rows filtered by the probes' keys.
-          // Fused into ONE job with the contains-verify (the cohort's only
-          // consumer) — the verify runs over the cached scan's partitions.
-          val suffixCohortOld = tierKFiltered(idx.suffixJoined, probeTierKSet)
-            .select("b_id", "b_norm", "tier", "k")
-          val tkSet = probeTierKSet.toSet
-          val suffixCohortNew = suffixDf(
-            buildsNew.filter(t => tkSet.contains((t._3, t._4))), aSide = false)
-          L("r1")(SuffixDup.verifyJoin(suffixDf(probesNew, aSide = true),
-            suffixCohortOld.unionByName(suffixCohortNew), cfg))
-        }
-        val fR2 = Future {
-          val buildTierKSet = buildsNew.map(t => (t._3, t._4)).distinct
-          val tkSet = buildTierKSet.toSet
-          // old probes precomputed at open(); new reps' probes are local
-          val probeCohort = tierKFiltered(idx.oldProbes, buildTierKSet)
-            .select("a_id", "a_norm", "tier", "k")
-            .unionByName(suffixDf(
-              LocalCandidates.probeEntries(normNewReps, cfg)
-                .filter(t => tkSet.contains((t._3, t._4))), aSide = true))
-          L("r2")(SuffixDup.verifyJoin(probeCohort,
-            suffixDf(buildsNew, aSide = false), cfg))
-        }
-        val r1 = Await.result(fR1, 10.minutes)
-        val r2 = Await.result(fR2, 10.minutes)
-        // r1/r2 are local — union + distinct on the driver, zero jobs
-        val relations = (r1.collect() ++ r2.collect())
-          .map(r => (r.getString(0), r.getString(1))).distinct.toSeq
-        val involvedReps = relations.flatMap(p => Seq(p._1, p._2)).distinct
-        val involvedSet = involvedReps.toSet
-        val normCohortRows = (if (involvedReps.isEmpty)
-            Seq.empty[(String, String)]
-          else L("normCohort")(
-            keyFiltered(idx.normMapAll, "nrep", involvedReps,
-              involvedReps.toDF("nrep"))
-              .select("image_id", "nrep")).collect()
-            .map(r => (r.getString(0), r.getString(1))).toSeq) ++
-          normNewRows.collect { case (id, _, nrep) if involvedSet(nrep) => (id, nrep) }
-        // expandSubstringPairs, driver-side and keyed on rep ids: members
-        // of the contained caption ↔ container rep and vice versa
-        val membersByRep = normCohortRows.groupMap(_._2)(_._1)
-        touching(LocalCandidates.expandSubstring(relations,
-          membersByRep.getOrElse(_, Nil)))
-      }
-
-      val (exactNew, mhNew) = Await.result(fExactMh, 10.minutes)
-      val simNew = Await.result(fSim, 10.minutes)
-      val subNew = Await.result(fSub, 10.minutes)
-
-      // driver-side union of the four generators' pair seqs (zero jobs)
-      val candRows: Array[org.apache.spark.sql.Row] =
-        (exactNew.map(p => org.apache.spark.sql.Row(p._1, p._2, "exact")) ++
-          mhNew.map(p => org.apache.spark.sql.Row(p._1, p._2, "minhash")) ++
-          simNew.map(p => org.apache.spark.sql.Row(p._1, p._2, "simhash")) ++
-          subNew.map(p => org.apache.spark.sql.Row(p._1, p._2, "substring"))).toArray
-      val sel = Seq("src", "dst", "source")
-      val candsNew = spark.createDataFrame(
-        java.util.Arrays.asList(candRows: _*),
-        org.apache.spark.sql.types.StructType(sel.map(
-          org.apache.spark.sql.types.StructField(_,
-            org.apache.spark.sql.types.StringType, nullable = true))))
-
-      // ---- verify (append step 6) ------------------------------------------
+      // ---- verify (append step 3) ------------------------------------------
       // hydration slice: verify inner-joins features on pair endpoints, so
       // only candidate-involved OLD rows are fetched (new rows are local).
       // Endpoint set built on the driver — the pair seqs are local. The
@@ -578,13 +278,10 @@ object Probe {
       // of the verified edges' sources) concurrently with verification —
       // removes the sequential label-lookup step after verify
       val fLab = Future {
-        L("labPrefetch")(
-          keyFiltered(idx.clustersPrev, "image_id", candOldIdSeq,
-            candOldIdSeq.toDF("image_id"))
+        L("labPrefetch")(Cohort.keyFiltered(idx.clustersPrev, "image_id", candOldIdSeq)
           .select("image_id", "cluster_id"))
       }
-      val oldSlice = keyFiltered(oldClean, "image_id", candOldIdSeq,
-          candOldIdSeq.toDF("image_id"))
+      val oldSlice = Cohort.keyFiltered(idx.cohort.oldClean, "image_id", candOldIdSeq)
         .select(cleanNew.columns.toIndexedSeq.map(col): _*)
       val verifiedNew = L("verifiedNew")(PairVerifier.verify(
         candsNew, oldSlice.unionByName(cleanNew), cfg))
@@ -637,10 +334,10 @@ object Probe {
       // prefilter for the scan
       val labelKeys = (qRows.map(_._2) ++
         qRows.collect { case (id, lab) if !newIdSet.contains(id) && id != lab => id })
-        .distinct.toSeq.toDF("cluster_id")
+        .distinct.toSeq
       // single consumer (the decis job) — left lazy so the clustersPrev scan
       // fuses into decis' evaluation instead of paying its own job
-      val prevTouched = prefiltered(clustersPrev, "cluster_id", labelKeys)
+      val prevTouched = Cohort.keyFiltered(clustersPrev, "cluster_id", labelKeys)
         .join(broadcast(remap), col("cluster_id") === col("__from"), "left")
         .withColumn("cluster_id", coalesce(col("__to"), col("cluster_id")))
         .join(broadcast(touchedLabels), Seq("cluster_id"))

@@ -14,8 +14,10 @@ import graft.util.Sessions
  * Sandbox protocol (BENCH/BASELINE.md): no real cluster exists here, so N
  * and 4N executors are modeled as two local[k] core counts — the shipped
  * protocol is N=2 vs 4N=8 cores (scripts/scaling_run.sh), chosen because
- * tools/CpuScaleProbe measured this box's vCPUs anti-scaling beyond ~8
- * threads. Same input, same JVM memory, `spark.sql.shuffle.partitions`
+ * pure arithmetic over `spark.range` (splitmix64, 2·10⁹ values, one JVM per
+ * core count) measured the 32-vCPU box's cores anti-scaling beyond ~8
+ * threads: 3.2x from 2 to 8 cores, 3.1x at 16 (BENCH/BASELINE.md). Same
+ * input, same JVM memory, `spark.sql.shuffle.partitions`
  * scaled with cores; efficiency = (T_N / T_4N) / 4. The core counts are
  * parameters of `measure`, not hardcoded here.
  *

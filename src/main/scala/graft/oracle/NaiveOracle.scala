@@ -3,7 +3,7 @@ package graft.oracle
 import scala.collection.mutable
 
 import graft.config.DedupConfig
-import graft.pairs.Meta
+import graft.pairs.{LocalCandidates, Meta}
 import graft.quality.Quality
 import graft.sig.{Shingle, SimHash, SuffixDup}
 
@@ -35,7 +35,9 @@ final case class OracleOutcome(
 object NaiveOracle {
 
   def run(rows: Seq[OracleRow], cfg: DedupConfig = DedupConfig.default): Seq[OracleOutcome] = {
-    val sorted = rows.sortBy(_.id)
+    // ids in Spark's string order (code points), as the engine orders them
+    val before = (a: String, b: String) => LocalCandidates.compareIds(a, b) < 0
+    val sorted = rows.sortWith((a, b) => before(a.id, b.id))
     val parent = mutable.Map[String, String]() // union-find
     def find(x: String): String = {
       var r = x
@@ -46,7 +48,7 @@ object NaiveOracle {
     }
     def union(a: String, b: String): Unit = {
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (before(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
 
     final case class Stored(id: String, norm: String, shingles: Array[Long],
@@ -72,7 +74,7 @@ object NaiveOracle {
           val substr = SuffixDup.isTokenAlignedSubstring(norm, p.norm, cfg) ||
             SuffixDup.isTokenAlignedSubstring(p.norm, norm, cfg)
           val score = math.max(hybrid, math.max(imageSim, if (substr) cfg.flagThreshold else 0.0))
-          if (score > bestScore || (score == bestScore && bestId.exists(_ > p.id))) {
+          if (score > bestScore || (score == bestScore && bestId.exists(before(p.id, _)))) {
             bestScore = score
             bestId = Some(p.id)
           }

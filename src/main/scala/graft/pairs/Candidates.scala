@@ -271,29 +271,6 @@ object Candidates {
       .select(CellPairs.col(col("ls"), col("rs"), col("si") === col("sj")))
   }
 
-  /** Key cap for `inSetPrefilter` on plans that EMBED the filtered scan
-    * more than once (the salted join consumes its cohort twice, and the
-    * append path unions three such subtrees into one write plan): Catalyst
-    * planning cost over an `In` child list is superlinear (155 s of driver
-    * planning at ~80k keys, r5), and an epoch A/B at the 1k-batch bench
-    * shape measured 40.6 s with 32k-literal prefilters vs 31.2 s without
-    * them — the scan savings were real but the repeated plan-tree cost ate
-    * them. 4k keys is comfortably inside the linear region; the serving
-    * path (single-use plans over cached scans, where 32k literals measured
-    * as a win) keeps its own higher cap in Probe. */
-  val InFilterKeyCap: Int = 4096
-
-  /** Capped literal-InSet prefilter under a cohort join (r5 serving-path
-    * microbench: scanning a corpus-wide index through a codegen'd `InSet`
-    * filter is ~3x cheaper than hash-probing the same rows through a
-    * broadcast join — 0.45 s vs 1.2-1.35 s on the 6.4M-row simhash index).
-    * The exact equi-join that follows drops InSet false positives, so the
-    * result set is untouched; callers pass a batch-bounded key seq. */
-  def inSetPrefilter(scan: DataFrame, c: String, keys: Seq[Any],
-      cap: Int = InFilterKeyCap): DataFrame =
-    if (keys.nonEmpty && keys.sizeIs <= cap) scan.where(col(c).isin(keys: _*))
-    else scan
-
   /** Max non-singleton key count the salted join will ROW-broadcast for the
     * m-attach join (~40B/row unsafe → ~80MB at the default). Env-overridable
     * for A/B profiling; 0 forces the shuffle shape. */

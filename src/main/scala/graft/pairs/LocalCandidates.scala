@@ -16,7 +16,7 @@ final case class Candidate(src: String, dst: String, source: String)
 /**
  * Driver-side twins of the candidate generators, shared by the pipeline's
  * candidates stage (when the clean batch fits the driver budget) and the
- * probe's batch-local derivations.
+ * batch-local derivations of `Cohort`, which append and probe run.
  *
  * A small batch's candidates are a job-count floor, not data: the
  * distributed generators cost about 35 Spark jobs (size-agg counts, key
@@ -25,8 +25,8 @@ final case class Candidate(src: String, dst: String, source: String)
  * (MinHash.signature/bandKeys, SimHash.comboKeys, XXH64 over UTF8String
  * bytes — bit parity pinned by SigSpec), so the only Spark work left is the
  * bounded collect of the batch's key columns. CandidatesSpec pins local ==
- * distributed candidate multisets; ProbeSpec's byte parity (probe ≡
- * append's decisions) covers the probe's use.
+ * distributed candidate multisets; ResumeSpec (append ≡ full recompute)
+ * covers the cohort's use.
  *
  * Ids are ordered the way Spark orders strings (`compareIds`), never with
  * `String.<`: the twins must pick the same min-id reps and the same src/dst
@@ -150,17 +150,28 @@ object LocalCandidates {
   /** Twin of `Candidates.expandSubstringPairs`: a containment pair of norm
     * reps (s, d) pairs every member of s with d and every member of d with
     * s, min-first. `members` maps a rep to all its rows, the rep included. */
-  def expandSubstring(relations: Seq[(String, String)],
-      members: String => Seq[String]): Seq[(String, String)] =
-    relations.flatMap { case (s, d) =>
-      (members(s).map((_, d)) ++ members(d).map((s, _))).collect {
-        case (a, b) if a != b => ordered(a, b)
-      }
-    }
+  def expandSubstring(relations: Seq[(String, String)], members: String => Seq[String],
+      touches: String => Boolean = All): Seq[(String, String)] =
+    relations.flatMap(expansions(_, members, touches).map { case (a, b) => ordered(a, b) })
+
+  /** How many pairs `expandSubstring` builds, counted without building them. */
+  def expandCount(relations: Seq[(String, String)], members: String => Seq[String],
+      touches: String => Boolean = All): Long =
+    relations.iterator.map(expansions(_, members, touches).size.toLong).sum
+
+  private def expansions(rel: (String, String), members: String => Seq[String],
+      touches: String => Boolean): Iterator[(String, String)] = {
+    val (s, d) = rel
+    (members(s).iterator.map((_, d)) ++ members(d).iterator.map((s, _)))
+      .filter { case (a, b) => a != b && (touches(a) || touches(b)) }
+  }
+
+  /** The pair filter that keeps every pair. */
+  val All: String => Boolean = _ => true
 
   /** Ids per shared (band, key) bucket, for buckets of two or more rows —
     * grouped once, then counted and expanded by `pairsOf`. */
-  private def buckets(rows: Seq[(String, Int, Long)]): Iterable[mutable.ArrayBuffer[String]] = {
+  private[pairs] def buckets(rows: Seq[(String, Int, Long)]): Iterable[mutable.ArrayBuffer[String]] = {
     val byKey = mutable.HashMap.empty[(Int, Long), mutable.ArrayBuffer[String]]
     rows.foreach { case (id, band, k) =>
       byKey.getOrElseUpdate((band, k), mutable.ArrayBuffer.empty[String]) += id
@@ -168,16 +179,28 @@ object LocalCandidates {
     byKey.values.filter(_.size > 1)
   }
 
-  private def pairCount(bs: Iterable[mutable.ArrayBuffer[String]]): Long =
-    bs.iterator.map(b => b.size.toLong * (b.size - 1) / 2).sum
+  /** Pairs of `pairsOf`, counted from each bucket's split: n ids that
+    * `touches` accepts and o that it does not hold C(n, 2) + n·o pairs. */
+  private[pairs] def pairCount(bs: Iterable[mutable.ArrayBuffer[String]],
+      touches: String => Boolean = All): Long =
+    bs.iterator.map { b =>
+      val n = b.count(touches).toLong
+      n * (n - 1) / 2 + n * (b.size - n)
+    }.sum
 
-  private def pairsOf(bs: Iterable[mutable.ArrayBuffer[String]]): Seq[(String, String)] = {
+  /** Same-bucket pairs with at least one id that `touches` accepts, built
+    * from the bucket's split: a bucket of m index rows and one batch row
+    * costs m pairs, not the m²/2 of building every pair and filtering. */
+  private[pairs] def pairsOf(bs: Iterable[mutable.ArrayBuffer[String]],
+      touches: String => Boolean = All): Seq[(String, String)] = {
     val out = mutable.ArrayBuffer.empty[(String, String)]
-    bs.foreach { ids =>
+    bs.foreach { b =>
+      val (hit, rest) = b.partition(touches)
       var i = 0
-      while (i < ids.length - 1) {
+      while (i < hit.length) {
         var j = i + 1
-        while (j < ids.length) { out += ordered(ids(i), ids(j)); j += 1 }
+        while (j < hit.length) { out += ordered(hit(i), hit(j)); j += 1 }
+        rest.foreach(o => out += ordered(hit(i), o))
         i += 1
       }
     }
@@ -187,23 +210,25 @@ object LocalCandidates {
   /** Twin of the salted grid join: all unordered same-bucket pairs,
     * min-first, one per shared bucket — the pair multiset
     * `Candidates.saltedSelfJoin` emits (CandidatesSpec pins grid == naive
-    * self-join; the cap only spreads distributed work, never changes it). */
-  def bucketPairs(rows: Seq[(String, Int, Long)]): Seq[(String, String)] =
-    pairsOf(buckets(rows))
+    * self-join; the cap only spreads distributed work, never changes it) —
+    * restricted to the pairs with an id that `touches` accepts. */
+  def bucketPairs(rows: Seq[(String, Int, Long)],
+      touches: String => Boolean = All): Seq[(String, String)] =
+    pairsOf(buckets(rows), touches)
 
   /** The clean batch's key columns, in the order `candidates` reads them. */
   val KeyCols: Seq[String] = Seq("image_id", "norm", "w", "h", "fmt", "phash", "shingles")
 
-  /** Row bound of the driver path: the driver budget
-    * (`ConnectedComponents.LocalEdgeCap`) over the band keys one row holds
+  /** Row bound of the driver path: the driver budget (by default
+    * `ConnectedComponents.LocalEdgeCap`) over the band keys one row holds
     * — `bands` minhash keys plus C(phashBands, phashAgree) combo keys,
     * 9,803 rows at the defaults. Measured on 4 vCPUs (collect, twins and
     * write of the stage, two rounds): 9,702 clean Synth rows with the hot
     * caption took 2.2 s on the driver against 3.1–10.3 s distributed; 988k
     * pairs from 249 rows took 5.2–5.4 s against 3.6–6.3 s, with a sampled
     * heap peak under 1.2 GB. */
-  def rowCap(cfg: DedupConfig): Long =
-    ConnectedComponents.LocalEdgeCap /
+  def rowCap(cfg: DedupConfig, budget: Long = ConnectedComponents.LocalEdgeCap): Long =
+    budget /
       (cfg.bands + SimHash.subsets(cfg.phashBands, cfg.phashAgree).size)
 
   /**

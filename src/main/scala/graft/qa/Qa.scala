@@ -241,7 +241,7 @@ object Qa {
 
   /** Re-derive clusters / recurring / decisions / audit from the persisted
     * features + verified stages with overrides applied — the same global
-    * step every incremental append runs (`Incremental.append` step 7). */
+    * step every incremental append runs (`Incremental.append` step 4). */
   def refreshGlobal(spark: SparkSession, root: String,
       cfg: DedupConfig = DedupConfig.default): DedupResult = {
     val feats = Layout.read(spark, root, "features")

@@ -25,7 +25,7 @@ class CachesSpec extends AnyFunSuite {
     def ids(from: Int, to: Int) =
       all.where(col("image_id") >= f"img-$from%010d" && col("image_id") < f"img-$to%010d")
     Dedup.runCheckpointed(spark, ids(0, 300), root, DedupConfig.default)
-    // unscoped: the chain pool may start its threads here, under "global"
+    // unscoped: the cohort's pool may start its threads here, under "global"
     Incremental.append(spark, root, ids(300, 330), "1", DedupConfig.default)
 
     // other suites register global persists concurrently; frames of THIS
@@ -38,8 +38,10 @@ class CachesSpec extends AnyFunSuite {
       case _ => false
     })
     val globalBefore = Caches.registered(Caches.GlobalOwner).toSet
+    // the driver-side cohort persists nothing; with no budget the cohort
+    // falls back to the distributed generators, which persist
     Caches.scoped("x") {
-      Incremental.append(spark, root, ids(330, 360), "2", DedupConfig.default)
+      Incremental.append(spark, root, ids(330, 360), "2", DedupConfig.default, cohortBudget = 0L)
     }
     val scoped = ofRoot(Caches.registered("x"))
     assert(scoped.nonEmpty, "the scoped append's chain persists are not under \"x\"")

@@ -285,6 +285,19 @@ class CandidatesSpec extends AnyFunSuite {
     assert(l == d, s"local-only=${l.diff(d).take(5)} distributed-only=${d.diff(l).take(5)}")
   }
 
+  test("bucket pairs touching a batch row in a 2,000-row bucket: the split equals build-then-filter") {
+    import graft.pairs.LocalCandidates
+    // one hot bucket of 2,000 index rows with the batch row in the middle of
+    // its rows, and a second bucket the batch does not touch
+    val index = (0 until 2000).map(i => (f"old-$i%05d", 3, 42L))
+    val rows = (index.take(1000) :+ (("new-0", 3, 42L))) ++ index.drop(1000) ++
+      (0 until 50).map(i => (f"old-$i%05d", 4, 7L))
+    val isNew = Set("new-0")
+    val filtered = LocalCandidates.bucketPairs(rows).filter(p => isNew(p._1) || isNew(p._2))
+    assert(filtered.size == 2000)
+    assert(LocalCandidates.bucketPairs(rows, isNew).sorted == filtered.sorted)
+  }
+
   test("a null phash is no key: two null-phash rows get no simhash candidate") {
     val cfg = DedupConfig.default
     val c = clean(Seq(

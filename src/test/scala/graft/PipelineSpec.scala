@@ -97,6 +97,18 @@ class PipelineSpec extends AnyFunSuite {
     assert(rate <= 0.01, s"decision mismatch rate $rate > 1%")
   }
 
+  test("oracle orders ids as Spark does: code points, not UTF-16 units") {
+    // "Ａ" (U+FF21) sorts before "😀" (U+1F600) in Spark's UTF-8 order and
+    // after it in UTF-16 order: the later arrival is the blocked copy, and
+    // the earlier one parents it and labels the cluster
+    val caption = "a photo of the quick brown fox jumping over the lazy dog at dawn"
+    val out = NaiveOracle.run(Seq("😀", "Ａ").map(OracleRow(_, caption, 64, 48, "png", 7L)), cfg)
+      .map(o => o.id -> o).toMap
+    assert(out("Ａ").decision == "new" && out("Ａ").cluster == "Ａ", out)
+    assert(out("😀").decision == "blocked" && out("😀").parent.contains("Ａ") &&
+      out("😀").cluster == "Ａ", out)
+  }
+
   test("top-k candidate list: head is the best match, ordered, capped at topK") {
     import org.apache.spark.sql.Row
     val rows = result.decisions

@@ -65,6 +65,10 @@ class ProbeSpec extends AnyFunSuite with ParallelTestExecution {
     val probedLowQ = probe.lowQuality.select("image_id").collect().map(_.getString(0)).toSet
     val outcomes = probe.outcomes.collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
+    // the cohort with no driver budget falls back to the distributed
+    // generators; the answer is the same
+    val probedFallback = rows(Probe.run(spark, root, batch, DedupConfig.default,
+      cohortBudget = 0L).decisions)
     assert(snapshot(root) == before, "probe mutated the root")
 
     // within-batch duplicate: p2's best match is p1, and it blocks
@@ -82,6 +86,10 @@ class ProbeSpec extends AnyFunSuite with ParallelTestExecution {
     assert(probed == appended, {
       val a = (probed -- appended).take(3); val b = (appended -- probed).take(3)
       s"probe-only=$a append-only=$b"
+    })
+    assert(probedFallback == appended, {
+      val a = (probedFallback -- appended).take(3); val b = (appended -- probedFallback).take(3)
+      s"fallback-probe-only=$a append-only=$b"
     })
     val appLowQ = Layout.read(spark, root, "low_quality")
       .where(col("batch") === "1")

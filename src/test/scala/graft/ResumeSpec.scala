@@ -61,7 +61,8 @@ class ResumeSpec extends AnyFunSuite with ParallelTestExecution {
     import spark.implicits._
     val rootInc = "target/resume-spec-incr"
     val rootFull = "target/resume-spec-incr-full"
-    deleteRec(Paths.get(rootInc)); deleteRec(Paths.get(rootFull))
+    val rootFallback = "target/resume-spec-incr-fallback"
+    Seq(rootInc, rootFull, rootFallback).foreach(r => deleteRec(Paths.get(r)))
     val all = Synth.corpus(spark, 480).toDF()
     val cut = f"img-${400}%010d"
     val old = all.where(col("image_id") < cut)
@@ -70,6 +71,11 @@ class ResumeSpec extends AnyFunSuite with ParallelTestExecution {
     Dedup.runCheckpointed(spark, old, rootInc, DedupConfig.default)
     val inc = Incremental.append(spark, rootInc, neu, "1", DedupConfig.default)
     val full = Dedup.runCheckpointed(spark, all, rootFull, DedupConfig.default)
+    // the cohort with no driver budget: its pairs come from the distributed
+    // generators over the prior rows and the batch
+    Dedup.runCheckpointed(spark, old, rootFallback, DedupConfig.default)
+    val fallback = Incremental.append(spark, rootFallback, neu, "1", DedupConfig.default,
+      cohortBudget = 0L)
 
     def pairSet(r: DedupResult) = r.verified
       .select(col("src"), col("dst"), round(col("hybrid"), 6), col("is_edge"),
@@ -90,6 +96,23 @@ class ResumeSpec extends AnyFunSuite with ParallelTestExecution {
         size(col("top_matches")))
       .collect().map(_.toSeq).toSet
     assert(decSet(inc) == decSet(full))
+
+    assert(pairSet(fallback) == pairSet(full))
+    assert(fallback.clusters.as[(String, String)].collect().toSet == cf)
+    assert(decSet(fallback) == decSet(full))
+    def batchCands(root: String) = Layout.read(spark, root, "candidates")
+      .where(col("batch") === "1").select("src", "dst", "source")
+      .as[(String, String, String)].collect().toSeq.sorted
+    assert(batchCands(rootInc) == batchCands(rootFallback))
+    // each append records where its cohort built the pairs, valued with the
+    // batch's clean rows
+    val batchClean = Layout.partitionRows(rootInc, "features")("1") -
+      Layout.partitionRows(rootInc, "low_quality").getOrElse("1", 0L)
+    def placements(root: String) = spark.read.parquet(s"$root/_metrics")
+      .where(col("stage") === "candidates").select("metric", "value")
+      .as[(String, Double)].collect().toSet
+    assert(placements(rootInc).contains(("placement[local]", batchClean.toDouble)))
+    assert(placements(rootFallback).contains(("placement[distributed]", batchClean.toDouble)))
 
     // the incremental run must have APPENDED the new partition, not
     // recomputed the base: lineage shows features/1 computed while the
