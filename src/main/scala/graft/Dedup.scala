@@ -9,6 +9,7 @@ import graft.cluster.ConnectedComponents
 import graft.config.DedupConfig
 import graft.metrics.Metrics
 import graft.pairs.{Candidates, LocalCandidates, PairVerifier}
+import graft.qa.Qa
 import graft.quality.Quality
 import graft.sig.Shingle
 import graft.tables.Layout
@@ -320,32 +321,45 @@ object Dedup {
     }
     val verified = Layout.runStage(spark, root, "verified", batchCol, base)(
       PairVerifier.verify(cands, clean, cfg).withColumn("batch", lit(BaseBatch)))
-    // QA overrides (force-link/split) apply at every edge derivation so a
-    // human decision survives re-runs — see graft.qa.Qa
-    val ovSeq = graft.qa.Qa.maxOverrideSeq(spark, root)
-    val edges = graft.qa.Qa.applyOverrides(spark, root,
-      verified.where(col("is_edge")).select("src", "dst", "match_score"))
-
-    // the applied-seq stamp moves only when THIS run actually re-derives
-    // clusters: a resumed run skips the stage, so stamping it would falsely
-    // claim overrides added since are reflected (Probe keys off the stamp)
-    val clustersWereComplete = Layout.isComplete(root, "clusters")
-    val clusters = Layout.runStage(spark, root, "clusters")(
-      graft.qa.Qa.applyPromotes(spark, root, ConnectedComponents.runAdaptive(
-        clean.select(col("image_id").as("id")), edges, cfg.maxCcIterations)
-        .select(col("id").as("image_id"), col("cluster_id"))))
-    if (!clustersWereComplete) graft.qa.Qa.recordOverridesApplied(root, ovSeq)
-
-    val recur = Layout.runStage(spark, root, "recurring")(recurring(clusters, cfg))
-    val decis = Layout.runStage(spark, root, "decisions")(
-      decisionsEnriched(clean, verified, clusters, recur, cfg))
-    val audit = Layout.runStage(spark, root, "audit")(auditLog(decis, cfg))
+    val (clusters, recur, decis, audit) = deriveGlobal(spark, root, clean, verified, cfg)
     Layout.runStage(spark, root, "duplicate_history", batchCol, base)(
       duplicateHistory(decis, verified))
 
     writeRunMetrics(spark, root, decis, lowQ, clusters, placement.map(p => (p,
       Layout.manifestRows(root, "features") - Layout.manifestRows(root, "low_quality"))))
     DedupResult(clean, lowQ, cands, verified, clusters, decis, recur, audit)
+  }
+
+  /**
+   * The global stages over the full edge set — clusters, recurring,
+   * decisions, audit — as the pipeline, append's slow path and
+   * `Qa.refreshGlobal` all derive them: QA overrides (force-link/split)
+   * applied to `verified`'s edges so a human decision survives re-runs,
+   * connected components, promotes re-anchoring the labels (see
+   * graft.qa.Qa), then the stages that read the labels. Each stage is a
+   * `Layout.runStage`, so a stage whose manifest exists is read back.
+   *
+   * The applied-seq stamp moves only when this call computes `clusters`: a
+   * resumed run skips the stage, so stamping it would falsely claim
+   * overrides added since are reflected (Probe keys off the stamp). Callers
+   * that invalidate the four stages first always stamp.
+   */
+  def deriveGlobal(spark: SparkSession, root: String, clean: DataFrame,
+      verified: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val ovSeq = Qa.maxOverrideSeq(spark, root)
+    val edges = Qa.applyOverrides(spark, root,
+      verified.where(col("is_edge")).select("src", "dst", "match_score"))
+    val clustersWereComplete = Layout.isComplete(root, "clusters")
+    val clusters = Layout.runStage(spark, root, "clusters")(
+      Qa.applyPromotes(spark, root, ConnectedComponents.runAdaptive(
+        clean.select(col("image_id").as("id")), edges, cfg.maxCcIterations,
+        cfg.ccPointerJump)
+        .select(col("id").as("image_id"), col("cluster_id"))))
+    if (!clustersWereComplete) Qa.recordOverridesApplied(root, ovSeq)
+    val recur = Layout.runStage(spark, root, "recurring")(recurring(clusters, cfg))
+    val decis = Layout.runStage(spark, root, "decisions")(
+      decisionsEnriched(clean, verified, clusters, recur, cfg))
+    (clusters, recur, decis, Layout.runStage(spark, root, "audit")(auditLog(decis, cfg)))
   }
 
   /**

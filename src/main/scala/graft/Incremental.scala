@@ -35,9 +35,12 @@ import graft.tables.Layout
  * Per-batch work: feature-extract new rows; run the cohort over the index
  * minus the batch's own partitions and write the batch's index rows and
  * candidates it returns; verify only pairs touching a new row. Global stages
- * (clusters / decisions / recurring / audit) are re-derived from the full
- * edge set — label closure is global by nature, and those stages cost
- * O(edges) + one window, not O(corpus²).
+ * (clusters / decisions / recurring / audit): on a root without QA
+ * overrides, `quotient` — the probe's CC step too — labels the batch
+ * against the prior clusters, and only the touched components' labels and
+ * the batch's decisions change; with overrides they are invalidated and
+ * re-derived from the full edge set by `Dedup.deriveGlobal`, the
+ * pipeline's own derivation (O(edges) + one window, not O(corpus²)).
  *
  * Correctness contract (asserted by ResumeSpec): appending batch B to a
  * root built from batch A produces EXACTLY the outputs of a full run over
@@ -89,18 +92,47 @@ object Incremental {
     Layout.flushLineage(spark, root)
   }
 
-  /** Keep only pairs that touch at least one id from `ids` (broadcast).
-    * The final select restores the pairs' COLUMN ORDER: a USING-join moves
-    * its key first, so after the dst join the frame is (dst, src, …) — a
-    * downstream positional `union` would silently flip every pair, turning
-    * src<dst arrival order on its head (a later row would block an earlier
-    * one; caught by StreamingSpec's boundary pair). */
-  private[graft] def pairsTouching(pairs: DataFrame, ids: DataFrame): DataFrame =
-    pairs
-      .join(broadcast(ids.select(col("id").as("src"), lit(true).as("sNew"))), Seq("src"), "left")
-      .join(broadcast(ids.select(col("id").as("dst"), lit(true).as("dNew"))), Seq("dst"), "left")
-      .where(col("sNew") || col("dNew"))
-      .select(pairs.columns.toIndexedSeq.map(col): _*)
+  /** The batch's quotient CC (see `quotient`): the label of every touched
+    * super-node and new id, the old labels a merge through a new row
+    * changed (`remapped`), and the new rows' assignments (`image_id`,
+    * `cluster_id`). */
+  private[graft] final case class Quotient(labels: Seq[(String, String)],
+      remapped: Seq[(String, String)], remap: DataFrame, assign: DataFrame) {
+    /** `df` with each `cluster_id` a merge changed replaced by its new label. */
+    def relabel(df: DataFrame): DataFrame =
+      df.join(broadcast(remap), col("cluster_id") === col("__from"), "left")
+        .withColumn("cluster_id", coalesce(col("__to"), col("cluster_id")))
+        .drop("__from", "__to")
+  }
+
+  /**
+   * Connected components of a batch over the prior clusters without
+   * touching the corpus — append's fast path and the probe both run it.
+   * Arrival order makes every new edge point old→new (src < dst, new ids
+   * sort last), so an old source collapses to its cluster label in
+   * `oldLabels` (one super-node per touched component; a source absent
+   * from it is new, its own label) and the quotient graph is
+   * batch-proportional by construction: a driver union-find
+   * (`ConnectedComponents.runLocal`, pinned equal to the distributed form
+   * by CcSpec). Labels are min member ids, and old labels ARE min member
+   * ids, so min-label propagation over the quotient yields exactly the
+   * full-graph labels (min composes). Promotes then re-anchor the touched
+   * components' labels (`Qa.anchorQuotient`, identity on a promote-free
+   * root, where the collect below is a driver copy).
+   */
+  private[graft] def quotient(spark: SparkSession, root: String, clustersPrev: DataFrame,
+      newIds: Seq[String], edges: Seq[(String, String)],
+      oldLabels: Map[String, String]): Quotient = {
+    import spark.implicits._
+    val isNew = newIds.toSet
+    val cc = ConnectedComponents.runLocal(newIds,
+      edges.map { case (s, d) => (oldLabels.getOrElse(s, s), d) })
+    val labels = graft.qa.Qa.anchorQuotient(spark, root, cc.toSeq.toDF("id", "cluster_id"),
+      clustersPrev).collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+    val remapped = labels.filter { case (id, lab) => !isNew(id) && id != lab }
+    Quotient(labels, remapped, remapped.toDF("__from", "__to"),
+      labels.filter(kv => isNew(kv._1)).toDF("image_id", "cluster_id"))
+  }
 
   /**
    * Append `newInput` as partition `batch` and bring every output stage up
@@ -185,59 +217,27 @@ object Incremental {
     val hasOverrides = graft.qa.Qa.readOverrides(spark, root).isDefined
     val canFast = !hasOverrides && Layout.isComplete(root, "clusters") &&
       Layout.isComplete(root, "decisions")
-    val newEdges = verifiedAll
-      .where(col("batch") === batch && col("is_edge"))
-      .select("src", "dst", "match_score")
 
-    val (clusters, recur, decis) = if (canFast) {
-      // The quotient graph is batch-proportional BY CONSTRUCTION (edges
-      // point old→new, old endpoints collapse to their cluster label), so
-      // its CC is a driver union-find (`ConnectedComponents.runLocal`, the
-      // same shape Probe serves with — pinned equal to the distributed
-      // form by CcSpec): the per-round Spark jobs the distributed loop paid
-      // here (join + agg + checkpoint + hash-sum, ~2 jobs x rounds, plus a
-      // remap count job) collapse into one bounded collect. The collected
-      // frames are exactly the ones this path already broadcast.
-      val newIdSet = newIdSeq.toSet
+    val (clusters, recur, decis, audit) = if (canFast) {
       // crash-rerun guard: a prior attempt may have committed a clusters
       // table that already includes this batch — new rows are recomputed
       // below, so they must not also survive from the contaminated read
       val clustersPrev = Layout.read(spark, root, "clusters")
         .join(broadcast(newIds.select(col("id").as("image_id"))),
           Seq("image_id"), "left_anti")
-      // quotient graph: old endpoints collapse to their current cluster
-      // label (one super-node per touched component); only src can be old
-      // (dst is always new). The big clusters table is only ever SCANNED
-      // against broadcast new keys; the edge set and label slice are
-      // batch-bounded, so they collect.
-      val edgeRows = newEdges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getString(0), r.getString(1)))
-      val srcIds = edgeRows.map(_._1).distinct.toSeq.toDF("src")
-      val labMap = clustersPrev
-        .join(broadcast(srcIds), col("image_id") === col("src"))
-        .select(col("image_id"), col("cluster_id")).collect()
+      // the big clusters table is only ever SCANNED with batch keys; the
+      // edge set and its sources' labels are batch-bounded, so they collect
+      val edgeRows = verifiedAll.where(col("batch") === batch && col("is_edge"))
+        .select("src", "dst").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      val labMap = Cohort.keyFiltered(clustersPrev, "image_id", edgeRows.map(_._1).distinct)
+        .select("image_id", "cluster_id").collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
-      val qEdges = edgeRows.toSeq
-        .map { case (s, d) => (labMap.getOrElse(s, s), d) }
-      // union-find over super-nodes + new ids: labels are min member ids,
-      // and old labels ARE min member ids, so min-label propagation over
-      // the quotient yields exactly the full-graph labels (min composes)
-      val qLabels = ConnectedComponents.runLocal(newIdSeq, qEdges)
-      // old components whose label changed (a merge through a new row)
-      val remapSeq = qLabels.toSeq
-        .filter { case (id, lab) => !newIdSet.contains(id) && id != lab }
-      val remap = remapSeq.toDF("__from", "__to")
-      val newAssign = qLabels.toSeq.filter(kv => newIdSet.contains(kv._1))
-        .toDF("image_id", "cluster_id")
+      val q = quotient(spark, root, clustersPrev, newIdSeq, edgeRows, labMap)
       // observability + spec hook: record that the incremental global path
       // ran and how many existing clusters this batch merged away
       Layout.bufferLineage(root, s"global@incremental/$batch",
-        remapSeq.size.toLong, 0.0, skipped = false)
-      val clustersNext = clustersPrev
-        .join(broadcast(remap), col("cluster_id") === col("__from"), "left")
-        .select(col("image_id"),
-          coalesce(col("__to"), col("cluster_id")).as("cluster_id"))
-        .unionByName(newAssign)
+        q.remapped.size.toLong, 0.0, skipped = false)
+      val clustersNext = q.relabel(clustersPrev).unionByName(q.assign)
 
       // old decision rows: best/top/decision final; refresh cluster_id via
       // the remap and re-derive is_recurring; new rows run the normal
@@ -259,11 +259,7 @@ object Incremental {
       // no broadcast hint — AQE converts when it fits, exactly as the full
       // path's recurring join behaves
       val recurFlag = recurW.select(col("cluster_id"), lit(true).as("__r"))
-      val decisOld = decisPrev
-        .drop("is_recurring")
-        .join(broadcast(remap), col("cluster_id") === col("__from"), "left")
-        .withColumn("cluster_id", coalesce(col("__to"), col("cluster_id")))
-        .drop("__from", "__to")
+      val decisOld = q.relabel(decisPrev.drop("is_recurring"))
         .join(recurFlag, Seq("cluster_id"), "left")
         .withColumn("is_recurring", coalesce(col("__r"), lit(false)))
         .drop("__r")
@@ -271,29 +267,16 @@ object Incremental {
       // left join of the small clean side against the corpus-sized clusters
       // table cannot broadcast (outer side) and would shuffle the corpus
       val decisNew = Dedup.decisionsEnriched(cleanNew,
-        verifiedAll.where(col("batch") === batch), newAssign, recurW, cfg)
+        verifiedAll.where(col("batch") === batch), q.assign, recurW, cfg)
       val decisW = Layout.runStageReplace(spark, root, "decisions")(
         decisOld.unionByName(decisNew))
-      (clustersW, recurW, decisW)
+      (clustersW, recurW, decisW,
+        Layout.runStage(spark, root, "audit")(Dedup.auditLog(decisW, cfg)))
     } else {
       Seq("clusters", "recurring", "decisions", "audit")
         .foreach(Layout.invalidate(root, _))
-      val ovSeq = graft.qa.Qa.maxOverrideSeq(spark, root)
-      val edges = graft.qa.Qa.applyOverrides(spark, root,
-        verifiedAll.where(col("is_edge")).select("src", "dst", "match_score"))
-      val clustersW = Layout.runStage(spark, root, "clusters")(
-        graft.qa.Qa.applyPromotes(spark, root, ConnectedComponents.runAdaptive(
-          clean.select(col("image_id").as("id")), edges, cfg.maxCcIterations,
-          cfg.ccPointerJump)
-          .select(col("id").as("image_id"), col("cluster_id"))))
-      graft.qa.Qa.recordOverridesApplied(root, ovSeq)
-      val recurW = Layout.runStage(spark, root, "recurring")(
-        Dedup.recurring(clustersW, cfg))
-      val decisW = Layout.runStage(spark, root, "decisions")(
-        Dedup.decisionsEnriched(clean, verifiedAll, clustersW, recurW, cfg))
-      (clustersW, recurW, decisW)
+      Dedup.deriveGlobal(spark, root, clean, verifiedAll, cfg)
     }
-    val audit = Layout.runStage(spark, root, "audit")(Dedup.auditLog(decis, cfg))
     // event log: only THIS batch's events append (old rows' best matches
     // are stable — edges point old→new), never a rewrite
     Layout.runStagePartition(spark, root, "duplicate_history", batchCol, batch)(

@@ -65,13 +65,14 @@ final case class ProbeResult(decisions: DataFrame, lowQuality: DataFrame) {
  *     re-plan profitably). The session conf is restored before returning;
  *     the result frames are already materialized by then.
  *  3. Everything batch-sized lives on the DRIVER as LocalRelations
- *     (`local`), and the quotient CC is a driver union-find
- *     (`ConnectedComponents.runLocal`). Candidates are append's own cohort
+ *     (`local`), and the quotient CC is append's own driver union-find
+ *     (`Incremental.quotient`). Candidates are append's own cohort
  *     (`Cohort.run`) over the cached index: its fetches are the cluster
  *     jobs, each bringing key-filtered index rows to the driver. Serving
  *     latency is a job-count floor: the localCheckpoint form of this path
- *     cost 56 sequential jobs ≈ 19–23 s warm per 1k batch; the localized
- *     form cuts it to about 20.
+ *     cost 56 sequential jobs ≈ 19–23 s warm per 1k batch; a traced
+ *     `probe_serving` run of the localized form reads 17.5 jobs per
+ *     request (the mean of a 50-row and a 1,000-row request).
  *
  * Scale shape is append's: the persisted index stages (rep_map / norm_map /
  * banded / banded_simhash / suffix_keys) are scanned with the batch's keys
@@ -229,11 +230,14 @@ object Probe {
     * every broadcast subtree and CC round was its own driver-coordinated
     * job), so the probe plan is cut at each index-cohort boundary and
     * everything batch-sized lives on the driver. */
-  private def local(spark: SparkSession, df: DataFrame, label: String): DataFrame = {
+  private def local(spark: SparkSession, df: DataFrame, label: String): DataFrame =
+    described(spark, label)(
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema))
+
+  private def described[A](spark: SparkSession, label: String)(f: => A): A = {
     val sc = spark.sparkContext
     sc.setJobDescription(s"probe:$label")
-    try spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-    finally sc.setJobDescription(null)
+    try f finally sc.setJobDescription(null)
   }
 
   private def evaluate(ctx: Context, input: DataFrame, cohortBudget: Long): ProbeResult =
@@ -287,67 +291,44 @@ object Probe {
         candsNew, oldSlice.unionByName(cleanNew), cfg))
 
       // ---- would-be global state over the touched components only ----------
-      // Always the quotient path: probe edges point old→new (unseen ids sort
-      // last), so the persisted clusters table — which reflects any QA
-      // overrides from its own derivation (the pending guard in run()) —
-      // composes with the new edges by min-label propagation; a force-split
-      // among OLD rows is already materialized in clustersPrev, and no
-      // override can name an unseen id. Promote rep-overrides re-anchor the
-      // touched components' labels after the CC (Qa.anchorQuotient). The
-      // quotient graph is batch-proportional BY CONSTRUCTION, so its CC is
-      // a driver-side union-find (ConnectedComponents.runLocal) — zero jobs
-      // instead of per-round join+agg+hash-sum jobs.
+      // Always the quotient path (`Incremental.quotient`): probe edges point
+      // old→new (unseen ids sort last), so the persisted clusters table —
+      // which reflects any QA overrides from its own derivation (the
+      // pending guard in run()) — composes with the new edges by min-label
+      // propagation; a force-split among OLD rows is already materialized in
+      // clustersPrev, and no override can name an unseen id.
       val clustersPrev = idx.clustersPrev
-      val newEdges = verifiedNew.where(col("is_edge"))
-        .select("src", "dst", "match_score")
       // edge sources ⊆ candidate endpoints, so the prefetched label map
-      // covers them; a source absent from it is a new id (its own label)
+      // covers them
       val labMap = Await.result(fLab, 10.minutes).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
-      val edgeSeq = newEdges.select("src", "dst").collect()
-        .map(r => (labMap.getOrElse(r.getString(0), r.getString(0)), r.getString(1)))
-        .toSeq
-      val labels = ConnectedComponents.runLocal(newIdSeq, edgeSeq)
-      // anchorQuotient is identity without promote overrides (L of a
-      // LocalRelation is a free driver copy); with promotes its two
-      // clustersPrev joins run once, localized here
-      val qLabels = L("qLabels")(graft.qa.Qa.anchorQuotient(spark, root,
-        labels.toSeq.toDF("id", "cluster_id"), clustersPrev))
-      // label-derived small sets built on the driver (collect of a
-      // LocalRelation is free; the DataFrame anti-join/distinct forms would
-      // each re-plan per consumer)
-      val qRows = qLabels.collect().map(r => r.getString(0) -> r.getString(1))
-      val remap = qRows.toSeq
-        .filter { case (id, lab) => !newIdSet.contains(id) && id != lab }
-        .toDF("__from", "__to")
-      val newAssign = qRows.toSeq.filter(kv => newIdSet.contains(kv._1))
-        .toDF("image_id", "cluster_id")
+      val edgeSeq = verifiedNew.where(col("is_edge")).select("src", "dst").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+      // with promotes, anchoring runs clustersPrev joins: their job is labelled
+      val q = described(spark, "qLabels")(
+        Incremental.quotient(spark, root, clustersPrev, newIdSeq, edgeSeq, labMap))
 
       // Recurring status needs member counts only for clusters a probed row
       // lands in (decisions join recurring on the NEW rows' labels): count the
       // touched clusters' previous members — a broadcast-filtered scan, never
       // a corpus shuffle — plus the batch's own assignments. Counts equal the
       // full-table counts append computes, restricted to the touched labels.
-      val touchedLabels = qRows.map(_._2).distinct.toSeq.toDF("cluster_id")
+      val touchedLabels = q.labels.map(_._2).distinct.toDF("cluster_id")
       // a member row survives iff its (possibly remapped) label is touched,
       // so stored-label ∈ touchedLabels ∪ remap-sources is a superset
       // prefilter for the scan
-      val labelKeys = (qRows.map(_._2) ++
-        qRows.collect { case (id, lab) if !newIdSet.contains(id) && id != lab => id })
-        .distinct.toSeq
+      val labelKeys = (q.labels.map(_._2) ++ q.remapped.map(_._1)).distinct
       // single consumer (the decis job) — left lazy so the clustersPrev scan
       // fuses into decis' evaluation instead of paying its own job
-      val prevTouched = Cohort.keyFiltered(clustersPrev, "cluster_id", labelKeys)
-        .join(broadcast(remap), col("cluster_id") === col("__from"), "left")
-        .withColumn("cluster_id", coalesce(col("__to"), col("cluster_id")))
+      val prevTouched = q.relabel(Cohort.keyFiltered(clustersPrev, "cluster_id", labelKeys))
         .join(broadcast(touchedLabels), Seq("cluster_id"))
         .select("image_id", "cluster_id")
-      val recurTouched = Dedup.recurring(prevTouched.unionByName(newAssign), cfg)
+      val recurTouched = Dedup.recurring(prevTouched.unionByName(q.assign), cfg)
 
       // the serving answer is a LocalRelation: computed HERE, inside the
       // probe-scoped conf, immune to later session-conf changes, and free
       // for the caller to re-consume (outcomes costs no cluster work)
-      val decis = L("decis")(Dedup.decisionsEnriched(cleanNew, verifiedNew, newAssign,
+      val decis = L("decis")(Dedup.decisionsEnriched(cleanNew, verifiedNew, q.assign,
         recurTouched, cfg))
       ProbeResult(decis, lowQ)
     }

@@ -130,12 +130,14 @@ object Candidates {
    * `sizes`, when given, must hold (band, bkey, m) for AT LEAST every key
    * with m >= 2 (extra keys are harmless — the join is inner on banded).
    * q21 passes its shingle-df aggregate so one pass serves both the
-   * boilerplate cap and the salt assignment.
+   * boilerplate cap and the salt assignment. Past `broadcastKeyCap`
+   * non-singleton keys the tag join is a shuffle-hash join.
    */
   def saltedSelfJoin(banded: DataFrame, cap: Int,
-      sizes: Option[DataFrame] = None): DataFrame = {
+      sizes: Option[DataFrame] = None,
+      broadcastKeyCap: Long = BroadcastKeyCap): DataFrame = {
     val (nonSingleton, nsKeys) = nonSingletonKeys(banded, sizes)
-    val bcast = nsKeys <= BroadcastKeyCap
+    val bcast = nsKeys <= broadcastKeyCap
     System.err.println(s"[saltedSelfJoin] nonSingleton keys=$nsKeys broadcast=$bcast")
     val tagJoin =
       if (bcast) broadcast(nonSingleton)
@@ -271,11 +273,10 @@ object Candidates {
       .select(CellPairs.col(col("ls"), col("rs"), col("si") === col("sj")))
   }
 
-  /** Max non-singleton key count the salted join will ROW-broadcast for the
-    * m-attach join (~40B/row unsafe → ~80MB at the default). Env-overridable
-    * for A/B profiling; 0 forces the shuffle shape. */
-  val BroadcastKeyCap: Long =
-    sys.env.get("GRAFT_SALT_BCAST_CAP").map(_.toLong).getOrElse(2000000L)
+  /** Max non-singleton key count the salted joins will ROW-broadcast for
+    * the tag / m-attach join (~40B/row unsafe → ~80MB). A caller's 0 forces
+    * the shuffle shape (CandidatesSpec runs both). */
+  val BroadcastKeyCap: Long = 2000000L
 
   /** Max non-singleton key count for the LongSet generator-filter pushdown
     * (8B/key in the broadcast set; the driver collect's transient Row boxing
@@ -284,8 +285,7 @@ object Candidates {
     * table, which measured as a 10.6x blowup of the candidate stage the
     * first time the key count crossed the old shared 2M gate (4M images,
     * BENCH/BASELINE.md round-4 4M section). */
-  val FilterKeyCap: Long =
-    sys.env.get("GRAFT_SALT_FILTER_CAP").map(_.toLong).getOrElse(16000000L)
+  val FilterKeyCap: Long = 16000000L
 
   /** MinHash band-key projection of the reps: (id, band, bkey) — the LSH
     * index. Persisted as the `banded` stage so an incremental batch joins

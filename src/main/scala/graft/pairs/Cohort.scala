@@ -33,7 +33,7 @@ import graft.sig.SuffixDup
  *    counted before any is built. When a fetch or the pair count passes
  *    `budget`, the pairs come from `Dedup.candidatesPlaced` over the prior
  *    clean rows ∪ the batch, kept to the pairs that touch the batch
- *    (`Incremental.pairsTouching`).
+ *    (`pairsTouching`).
  * Only pairs with a batch member are ever built.
  */
 object Cohort {
@@ -94,13 +94,28 @@ object Cohort {
     * cost is flat in the key count, filters instead. */
   val InSetKeyCap: Int = 32 * 1024
 
-  /** Rows of `scan` whose column `c` is one of `keys` (distinct). */
+  /** Rows of `scan` whose column `c` is one of `keys` (distinct), in
+    * `scan`'s column order: a USING semi-join moves its key first, and the
+    * cohort's fetches read their rows by position. */
   private[graft] def keyFiltered(scan: DataFrame, c: String, keys: Seq[Any]): DataFrame =
     if (keys.isEmpty) scan.where(lit(false))
     else if (keys.sizeIs <= InSetKeyCap) scan.where(col(c).isin(keys: _*))
     else scan.join(broadcast(scan.sparkSession.createDataFrame(
       java.util.Arrays.asList(keys.map(Row(_)): _*), StructType(Seq(scan.schema(c))))),
-      Seq(c), "left_semi")
+      Seq(c), "left_semi").select(scan.columns.toIndexedSeq.map(col): _*)
+
+  /** Keep only pairs that touch at least one id from `ids` (broadcast).
+    * The final select restores the pairs' COLUMN ORDER: a USING-join moves
+    * its key first, so after the dst join the frame is (dst, src, …) — a
+    * downstream positional `union` would silently flip every pair, turning
+    * src<dst arrival order on its head (a later row would block an earlier
+    * one; caught by StreamingSpec's boundary pair). */
+  private def pairsTouching(pairs: DataFrame, ids: DataFrame): DataFrame =
+    pairs
+      .join(broadcast(ids.select(col("id").as("src"), lit(true).as("sNew"))), Seq("src"), "left")
+      .join(broadcast(ids.select(col("id").as("dst"), lit(true).as("dNew"))), Seq("dst"), "left")
+      .where(col("sNew") || col("dNew"))
+      .select(pairs.columns.toIndexedSeq.map(col): _*)
 
   /** The pool the chains run on (and the probe's label prefetch). Threads
     * are made as needed, so nested and concurrent callers never wait on a
@@ -256,7 +271,7 @@ object Cohort {
       val (all, _) = graft.Dedup.candidatesPlaced(
         idx.oldClean.select(keys: _*).unionByName(batch.select(keys: _*)), cfg,
         Some(LocalCandidates.rowCap(cfg, budget)))
-      (graft.Incremental.pairsTouching(all, ids.toDF("id")), "distributed")
+      (pairsTouching(all, ids.toDF("id")), "distributed")
     }
     Result(candidates, placement, repMap, normMap, banded, bandedSim, suffixKeys)
   }

@@ -3,7 +3,6 @@ package graft.qa
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.cluster.ConnectedComponents
 import graft.config.DedupConfig
 import graft.tables.Layout
 import graft.{Dedup, DedupResult}
@@ -130,7 +129,7 @@ object Qa {
 
   /** Re-anchor cluster labels to their promoted member (latest promote per
     * FINAL cluster wins). Runs after every CC label derivation that persists
-    * `clusters` — batch, incremental slow path, and refresh — so decisions /
+    * `clusters` (`Dedup.deriveGlobal`), so decisions /
     * recurring / metrics all see the promoted label. Membership is a pure
     * rename: no edges change, so counts and groupings are untouched. The
     * anchor map is promote-scale and broadcasts; the labels table is only
@@ -149,7 +148,7 @@ object Qa {
     }
 
   /**
-   * Promote anchoring for a QUOTIENT labeling (Probe's read-only path):
+   * Promote anchoring for a QUOTIENT labeling (`Incremental.quotient`):
    * `qLabels` (id, cluster_id) covers only touched super-nodes + new ids —
    * not full membership — so a promoted id's FINAL label is found by
    * composing its stored label (clustersPrev) through the quotient labels,
@@ -194,8 +193,7 @@ object Qa {
         .map(_.agg(max("seq")).head().getLong(0)).getOrElse(-1L))
 
   /** Stamp the root: its persisted global stages reflect overrides up to
-    * `seq`. Written by every path that re-derives clusters with overrides
-    * applied (batch, incremental slow path, refreshGlobal). */
+    * `seq`. Written by `Dedup.deriveGlobal` when it re-derives clusters. */
   private[graft] def recordOverridesApplied(root: String, seq: Long): Unit =
     Layout.markerWrite(appliedSeqPath(root), seq.toString)
 
@@ -240,8 +238,9 @@ object Qa {
   }
 
   /** Re-derive clusters / recurring / decisions / audit from the persisted
-    * features + verified stages with overrides applied — the same global
-    * step every incremental append runs (`Incremental.append` step 4). */
+    * features + verified stages with overrides applied: the four stages are
+    * invalidated, then `Dedup.deriveGlobal` — the derivation the pipeline
+    * and append's slow path run — recomputes them and stamps the root. */
   def refreshGlobal(spark: SparkSession, root: String,
       cfg: DedupConfig = DedupConfig.default): DedupResult = {
     val feats = Layout.read(spark, root, "features")
@@ -252,20 +251,7 @@ object Qa {
       .where(col("status") =!= Approved)
 
     Seq("clusters", "recurring", "decisions", "audit").foreach(Layout.invalidate(root, _))
-    val ovSeq = maxOverrideSeq(spark, root)
-    val edges = applyOverrides(spark, root,
-      verifiedAll.where(col("is_edge")).select("src", "dst", "match_score"))
-    val clusters = Layout.runStage(spark, root, "clusters")(
-      applyPromotes(spark, root, ConnectedComponents.runAdaptive(
-        clean.select(col("image_id").as("id")), edges, cfg.maxCcIterations,
-        cfg.ccPointerJump)
-        .select(col("id").as("image_id"), col("cluster_id"))))
-    recordOverridesApplied(root, ovSeq)
-    val recur = Layout.runStage(spark, root, "recurring")(
-      Dedup.recurring(clusters, cfg))
-    val decis = Layout.runStage(spark, root, "decisions")(
-      Dedup.decisionsEnriched(clean, verifiedAll, clusters, recur, cfg))
-    val audit = Layout.runStage(spark, root, "audit")(Dedup.auditLog(decis, cfg))
+    val (clusters, recur, decis, audit) = Dedup.deriveGlobal(spark, root, clean, verifiedAll, cfg)
     Dedup.writeRunMetrics(spark, root, decis, lowQ, clusters)
     DedupResult(clean, lowQ, candsAll, verifiedAll, clusters, decis, recur, audit)
   }

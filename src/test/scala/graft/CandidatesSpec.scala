@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.DedupConfig
-import graft.pairs.Candidates
+import graft.pairs.{Candidates, Cohort}
 import graft.sig.SuffixDup
 
 class CandidatesSpec extends AnyFunSuite {
@@ -25,13 +25,32 @@ class CandidatesSpec extends AnyFunSuite {
       .select($"l.id".as("src"), $"r.id".as("dst"))
       .as[(String, String)].collect().toSet
 
-    val salted = Candidates.saltedSelfJoin(banded, cap)
-      .as[(String, String)].collect()
+    // both tag-join branches: broadcast, and shuffle-hash past the key cap
+    for (bcastCap <- Seq(Candidates.BroadcastKeyCap, 0L)) {
+      val salted = Candidates.saltedSelfJoin(banded, cap, broadcastKeyCap = bcastCap)
+        .as[(String, String)].collect()
 
-    assert(salted.length == salted.toSet.size, "no duplicate pairs")
-    assert(salted.toSet == naive)
+      assert(salted.length == salted.toSet.size, "no duplicate pairs")
+      assert(salted.toSet == naive)
+    }
     // sanity: the hot bucket alone contributes C(80,2) pairs
     assert(naive.size == 3 + 28 + (80 * 79) / 2)
+  }
+
+  test("Cohort.keyFiltered past InSetKeyCap: the semi-join keeps the driver filter's rows and column order") {
+    import spark.implicits._
+    val rows = (0 until 3000).map(i => (f"r$i%05d", (i * 13 % 5000).toLong))
+    val keys = (0L until Cohort.InSetKeyCap + 1L).map(_ * 3)
+    assert(keys.size == 32769)
+    val frame = rows.toDF("id", "k")
+    val filtered = Cohort.keyFiltered(frame, "k", keys)
+    assert(filtered.queryExecution.optimizedPlan.toString.contains("LeftSemi"),
+      "past the cap the filter is the broadcast left-semi join")
+    // the cohort's fetches read rows by position
+    assert(filtered.columns.toSeq == frame.columns.toSeq)
+    val keySet = keys.toSet
+    assert(filtered.as[(String, Long)].collect().sorted.toSeq ==
+      rows.filter(r => keySet(r._2)).sorted)
   }
 
   test("sketch salted self-join == naive pair set on all three tiers") {
