@@ -13,6 +13,7 @@ import graft.qa.Qa
 import graft.quality.Quality
 import graft.sig.Shingle
 import graft.tables.Layout
+import graft.util.DriverRows
 
 /** All pipeline outputs (each a lazily-planned DataFrame). */
 final case class DedupResult(
@@ -38,7 +39,7 @@ final case class DedupResult(
  *   input → quality split → feature projection (norm, shingles, phash)
  *         → candidates: exact ∪ minhash-LSH ∪ simhash ∪ substring —
  *           placed once by a row gate (`candidatesPlaced`): a batch that
- *           fits the driver budget is one bounded collect of its key
+ *           fits `cfg.driverBudget` is one bounded collect of its key
  *           columns and the driver twins (`LocalCandidates`); a larger one
  *           runs the distributed generators (exact-group rep on exact_key,
  *           salted band joins, suffix join)
@@ -78,29 +79,18 @@ object Dedup {
 
   /**
    * The candidates stage, placed once from a measured size (the
-   * `ConnectedComponents.runAdaptive` pattern): one bounded
-   * `limit(cap + 1)` collect of the clean key columns; when at most
-   * `localRowCap` rows come back they run through the driver twins and the
-   * stage is one LocalRelation, otherwise (or when the twins' pair count
-   * passes the driver budget) `candidates` plans the distributed
-   * generators. Same (src, dst, source) multiset either way
+   * `ConnectedComponents.runAdaptive` pattern): one bounded collect of the
+   * clean key columns (`DriverRows.atMost`); when at most
+   * `LocalCandidates.rowCap(cfg)` rows come back they run through the
+   * driver twins and the stage is one LocalRelation, otherwise (or when the
+   * twins' pair count passes `cfg.driverBudget`) `candidates` plans the
+   * distributed generators. Same (src, dst, source) multiset either way
    * (CandidatesSpec). Returns the frame and its placement, "local" or
-   * "distributed". The cap defaults to `LocalCandidates.rowCap(cfg)`; a cap
-   * <= 0 skips the collect.
+   * "distributed".
    */
-  def candidatesPlaced(clean: DataFrame, cfg: DedupConfig,
-      localRowCap: Option[Long] = None): (DataFrame, String) = {
-    val cap = localRowCap.getOrElse(LocalCandidates.rowCap(cfg))
-    val local =
-      if (cap <= 0L) None
-      else {
-        // one partition under the limit: the collect is ONE job whose task
-        // stops after cap + 1 rows (over many partitions a limit-collect
-        // scans one, then a growing batch — a job each)
-        val rows = clean.select(LocalCandidates.KeyCols.map(col): _*).coalesce(1)
-          .limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
-        if (rows.length > cap) None else LocalCandidates.candidates(rows.toSeq, cfg)
-      }
+  def candidatesPlaced(clean: DataFrame, cfg: DedupConfig): (DataFrame, String) = {
+    val local = DriverRows.atMost(clean.select(LocalCandidates.KeyCols.map(col): _*),
+      LocalCandidates.rowCap(cfg)).flatMap(rows => LocalCandidates.candidates(rows.toSeq, cfg))
     val spark = clean.sparkSession
     import spark.implicits._
     // columns named by the case class: a renaming Project over a large
@@ -264,9 +254,10 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val edges = verified.where(col("is_edge")).select("src", "dst", "match_score")
 
+    // as for feats: the CC gate's bounded collect runs in ONE task
+    verified.count()
     val clusters = ConnectedComponents.runAdaptive(
-      clean.select(col("image_id").as("id")), edges, cfg.maxCcIterations,
-        cfg.ccPointerJump)
+      clean.select(col("image_id").as("id")), edges, cfg)
       .select(col("id").as("image_id"), col("cluster_id"))
 
     val recur = recurring(clusters, cfg)
@@ -352,8 +343,7 @@ object Dedup {
     val clustersWereComplete = Layout.isComplete(root, "clusters")
     val clusters = Layout.runStage(spark, root, "clusters")(
       Qa.applyPromotes(spark, root, ConnectedComponents.runAdaptive(
-        clean.select(col("image_id").as("id")), edges, cfg.maxCcIterations,
-        cfg.ccPointerJump)
+        clean.select(col("image_id").as("id")), edges, cfg)
         .select(col("id").as("image_id"), col("cluster_id"))))
     if (!clustersWereComplete) Qa.recordOverridesApplied(root, ovSeq)
     val recur = Layout.runStage(spark, root, "recurring")(recurring(clusters, cfg))

@@ -8,6 +8,7 @@ import graft.config.DedupConfig
 import graft.pairs.{Candidates, Cohort, LocalCandidates, PairVerifier}
 import graft.sig.SuffixDup
 import graft.tables.Layout
+import graft.util.DriverRows
 
 /**
  * Partition-level incremental append (SURVEY S4 / reference
@@ -20,7 +21,7 @@ import graft.tables.Layout
  * below are scanned with the batch's keys (affected band buckets, phashes,
  * norms, suffix tiers) and the cohort rows come back to the driver, where
  * the `LocalCandidates` twins build only the pairs that touch the batch.
- * Past the driver budget the pairs come from the distributed generators
+ * Past `cfg.driverBudget` the pairs come from the distributed generators
  * instead (`Dedup.candidatesPlaced`). The index stages:
  *
  *   rep_map        exact-group key → rep        (match new rows to groups)
@@ -137,11 +138,9 @@ object Incremental {
   /**
    * Append `newInput` as partition `batch` and bring every output stage up
    * to date. Returns the updated DedupResult over the full corpus.
-   * `cohortBudget` is the cohort's driver budget (`Cohort.run`).
    */
   def append(spark: SparkSession, root: String, newInput: DataFrame, batch: String,
-      cfg: DedupConfig = DedupConfig.default,
-      cohortBudget: Long = ConnectedComponents.LocalEdgeCap): DedupResult = {
+      cfg: DedupConfig = DedupConfig.default): DedupResult = {
     require(batch != Dedup.BaseBatch && batch != IndexBatch, s"batch '$batch' is reserved")
     import spark.implicits._
     ensureIndexes(spark, root, cfg)
@@ -164,21 +163,20 @@ object Incremental {
     // sees exactly what the first attempt saw. The cohort returns the
     // batch's candidates and its rows of the five index stages; each is
     // written as one partition.
-    val keyRows = {
-      val proj = cleanNew.select(LocalCandidates.KeyCols.map(col): _*)
-      spark.createDataFrame(java.util.Arrays.asList(proj.collect(): _*), proj.schema)
-    }
-    val newIdSeq = keyRows.collect().map(_.getString(0)).toSeq
+    val keyProj = cleanNew.select(LocalCandidates.KeyCols.map(col): _*)
+    val keyRowSeq = keyProj.collect().toSeq
+    val keyRows = DriverRows.frame(spark, keyRowSeq, keyProj.schema)
+    val newIdSeq = keyRowSeq.map(_.getString(0))
     val newIds = newIdSeq.toDF("id")
     val cohort = Cohort.run(spark,
       Cohort.Index.of(Layout.read(spark, root, _).where(col("batch") =!= batch), cfg),
-      keyRows, cfg, s"graft:cohort/$batch:", cohortBudget)
+      keyRows, cfg, s"graft:cohort/$batch:")
     def write(stage: String)(df: => DataFrame): DataFrame =
       Layout.runStagePartition(spark, root, stage, batchCol, batch)(
         df.withColumn("batch", lit(batch)))
     // the index rows are batch-sized: one file per partition
     def index(stage: String)(df: => DataFrame): Unit = write(stage)(df.coalesce(1))
-    index("rep_map")(spark.createDataFrame(java.util.Arrays.asList(cohort.repMap: _*),
+    index("rep_map")(DriverRows.frame(spark, cohort.repMap,
       keyRows.select((Seq("image_id") ++ Candidates.ExactKeyCols).map(col): _*).schema
         .add("rep", "string")))
     index("norm_map")(cohort.normMap.toDF("image_id", "norm", "nrep"))

@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-import graft.cluster.ConnectedComponents
 import graft.config.DedupConfig
 import graft.pairs.{Cohort, PairVerifier}
 import graft.tables.Layout
+import graft.util.DriverRows
 
 /**
  * Read-only probe outputs: dedup decisions for the probed rows (the exact
@@ -71,12 +71,12 @@ final case class ProbeResult(decisions: DataFrame, lowQuality: DataFrame) {
  *     jobs, each bringing key-filtered index rows to the driver. Serving
  *     latency is a job-count floor: the localCheckpoint form of this path
  *     cost 56 sequential jobs ≈ 19–23 s warm per 1k batch; a traced
- *     `probe_serving` run of the localized form reads 17.5 jobs per
+ *     `probe_serving` run of the localized form reads 17 jobs per
  *     request (the mean of a 50-row and a 1,000-row request).
  *
  * Scale shape is append's: the persisted index stages (rep_map / norm_map /
  * banded / banded_simhash / suffix_keys) are scanned with the batch's keys
- * and the corpus never shuffles while the cohort fits the driver budget.
+ * and the corpus never shuffles while the cohort fits `cfg.driverBudget`.
  * Per-probe-batch work is proportional to the batch and the band buckets /
  * components it touches.
  *
@@ -114,9 +114,7 @@ object Probe {
       val cfg: DedupConfig, idx: Index, stampAtOpen: String) {
     private[Probe] def index: Index = idx
     private[Probe] def fresh: Boolean = stamp(root) == stampAtOpen
-    def probe(input: DataFrame,
-        cohortBudget: Long = ConnectedComponents.LocalEdgeCap): ProbeResult =
-      evaluate(this, input, cohortBudget)
+    def probe(input: DataFrame): ProbeResult = evaluate(this, input)
     def close(): Unit = idx.frames.foreach(_.unpersist(false))
   }
 
@@ -173,8 +171,7 @@ object Probe {
   /** Evaluate `input` read-only against `root`, reusing (or transparently
     * rebuilding) the cached serving context. */
   def run(spark: SparkSession, root: String, input: DataFrame,
-      cfg: DedupConfig = DedupConfig.default,
-      cohortBudget: Long = ConnectedComponents.LocalEdgeCap): ProbeResult = {
+      cfg: DedupConfig = DedupConfig.default): ProbeResult = {
     // The quotient path composes with the PERSISTED clusters table; a QA
     // override recorded after the last global derivation (forceLink without
     // refreshGlobal) is invisible to it, so probe answers would diverge
@@ -195,7 +192,7 @@ object Probe {
           c
       }
     }
-    ctx.probe(input, cohortBudget)
+    ctx.probe(input)
   }
 
   /** Set probe-scoped session conf, restore on exit. The result frames are
@@ -223,16 +220,15 @@ object Probe {
     }
 
   /** Materialize a batch-proportional frame onto the driver as a
-    * `LocalRelation` (one collect job; zero jobs for every later consumer —
-    * a broadcast of a LocalRelation is a driver-side copy, not a cluster
-    * job). THE serving-latency primitive: probe latency is a JOB-COUNT
-    * floor (measured 56 sequential jobs ≈ 19–23 s warm for a 1k batch —
-    * every broadcast subtree and CC round was its own driver-coordinated
-    * job), so the probe plan is cut at each index-cohort boundary and
+    * `LocalRelation`: one collect job, and no job for a later filter or
+    * projection. A join that broadcasts it runs a job of its own (Spark
+    * 4.1.2 fills a broadcast through a collect), so key lookups use
+    * `Cohort.keyFiltered`. THE serving-latency primitive: probe latency is
+    * a JOB-COUNT floor (measured 56 sequential jobs ≈ 19–23 s warm for a 1k
+    * batch), so the probe plan is cut at each index-cohort boundary and
     * everything batch-sized lives on the driver. */
   private def local(spark: SparkSession, df: DataFrame, label: String): DataFrame =
-    described(spark, label)(
-      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema))
+    described(spark, label)(DriverRows.frame(spark, df.collect(), df.schema))
 
   private def described[A](spark: SparkSession, label: String)(f: => A): A = {
     val sc = spark.sparkContext
@@ -240,7 +236,7 @@ object Probe {
     try f finally sc.setJobDescription(null)
   }
 
-  private def evaluate(ctx: Context, input: DataFrame, cohortBudget: Long): ProbeResult =
+  private def evaluate(ctx: Context, input: DataFrame): ProbeResult =
     withProbeConf(ctx.spark) {
       val spark = ctx.spark
       val cfg = ctx.cfg
@@ -263,7 +259,7 @@ object Probe {
       // ---- candidates: append's cohort over the cached index, no writes ----
       // (a LocalRelation on the driver side: localizing it is a free copy)
       val candsNew = L("cands")(
-        Cohort.run(spark, idx.cohort, cleanNew, cfg, "probe:", cohortBudget).candidates)
+        Cohort.run(spark, idx.cohort, cleanNew, cfg, "probe:").candidates)
       val candRows = candsNew.collect()
       implicit val ec: scala.concurrent.ExecutionContext = Cohort.pool
       import scala.concurrent.{Await, Future}
@@ -310,18 +306,19 @@ object Probe {
 
       // Recurring status needs member counts only for clusters a probed row
       // lands in (decisions join recurring on the NEW rows' labels): count the
-      // touched clusters' previous members — a broadcast-filtered scan, never
-      // a corpus shuffle — plus the batch's own assignments. Counts equal the
+      // touched clusters' previous members — a key-filtered scan, never a
+      // corpus shuffle — plus the batch's own assignments. Counts equal the
       // full-table counts append computes, restricted to the touched labels.
-      val touchedLabels = q.labels.map(_._2).distinct.toDF("cluster_id")
+      val touchedLabels = q.labels.map(_._2).distinct
       // a member row survives iff its (possibly remapped) label is touched,
       // so stored-label ∈ touchedLabels ∪ remap-sources is a superset
       // prefilter for the scan
-      val labelKeys = (q.labels.map(_._2) ++ q.remapped.map(_._1)).distinct
+      val labelKeys = (touchedLabels ++ q.remapped.map(_._1)).distinct
       // single consumer (the decis job) — left lazy so the clustersPrev scan
       // fuses into decis' evaluation instead of paying its own job
-      val prevTouched = q.relabel(Cohort.keyFiltered(clustersPrev, "cluster_id", labelKeys))
-        .join(broadcast(touchedLabels), Seq("cluster_id"))
+      val prevTouched = Cohort.keyFiltered(
+          q.relabel(Cohort.keyFiltered(clustersPrev, "cluster_id", labelKeys)),
+          "cluster_id", touchedLabels)
         .select("image_id", "cluster_id")
       val recurTouched = Dedup.recurring(prevTouched.unionByName(q.assign), cfg)
 

@@ -3,6 +3,9 @@ package graft.cluster
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.config.DedupConfig
+import graft.util.DriverRows
+
 /**
  * Iterative DataFrame connected components: min-label propagation to a
  * fixpoint (SURVEY.md §2.4 JN4 — replaces the reference's sequential
@@ -109,48 +112,34 @@ object ConnectedComponents {
       .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id"))
   }
 
-  /** Max edge count `runAdaptive` will collect to the driver for the
-    * union-find fast path (~60B/edge of transient Row boxing → ~60MB at the
-    * default). Same count-gated philosophy as `Candidates.FilterKeyCap`:
-    * the gate is MEASURED (one bounded limit-collect), never guessed, and
-    * past it the honest distributed asymptote stands — at 10^12 rows the
-    * edge set is corpus-shaped and no driver holds it. 0 disables. The
-    * same budget gates the pipeline's driver-side candidates
-    * (`LocalCandidates.rowCap` and its pair count), so
-    * `GRAFT_CC_LOCAL_CAP` moves both gates. */
-  val LocalEdgeCap: Long =
-    sys.env.get("GRAFT_CC_LOCAL_CAP").map(_.toLong).getOrElse(1000000L)
-
   /**
    * Count-gated CC: identical labels to `run` (cluster_id = min member id —
-   * CcSpec pins runLocal == run), but when the edge set fits the driver
-   * budget the per-round Spark jobs (join + agg + checkpoint + hash-sum,
-   * ~2 jobs × O(diameter) rounds) collapse into ONE bounded limit-collect
-   * and a driver union-find; the label map broadcasts back and singletons
-   * get their own id through the same final left join. Dedup clusters are
-   * sparse by construction (edges ≪ rows — the generators link members to
-   * group representatives), so the gate binds only when duplicate mass is
-   * itself corpus-scale, exactly when the distributed loop is the right
-   * shape anyway. `localEdgeCap` is the gate (`LocalEdgeCap` by default).
+   * CcSpec pins runLocal == run), but when the edge set fits
+   * `cfg.driverBudget` the per-round Spark jobs (join + agg + checkpoint +
+   * hash-sum, ~2 jobs × O(diameter) rounds) collapse into ONE bounded
+   * collect and a driver union-find; the label map broadcasts back and
+   * singletons get their own id through the same final left join. Dedup
+   * clusters are sparse by construction (edges ≪ rows — the generators link
+   * members to group representatives), so the gate binds only when
+   * duplicate mass is itself corpus-scale, exactly when the distributed
+   * loop is the right shape anyway: at 10^12 rows the edge set is
+   * corpus-shaped and no driver holds it. Past the gate `run` takes its
+   * iteration cap and pointer-jump flag from `cfg` too.
    */
-  def runAdaptive(vertices: DataFrame, edges: DataFrame, maxIter: Int = 50,
-      pointerJump: Boolean = false, localEdgeCap: Long = LocalEdgeCap): DataFrame = {
-    if (localEdgeCap <= 0L) return run(vertices, edges, maxIter, pointerJump)
+  def runAdaptive(vertices: DataFrame, edges: DataFrame, cfg: DedupConfig): DataFrame = {
+    def distributed = run(vertices, edges, cfg.maxCcIterations, cfg.ccPointerJump)
+    val pairs = edges.select(col("src"), col("dst"))
     // the union-find twin is string-keyed; non-string id columns stay on
     // the distributed loop (only the pipeline's image_id paths opt in)
-    val stringIds = edges.select(col("src"), col("dst")).schema.forall(
-      _.dataType == org.apache.spark.sql.types.StringType)
-    if (!stringIds) return run(vertices, edges, maxIter, pointerJump)
-    val probe = edges.select(col("src"), col("dst"))
-      .limit(math.min(localEdgeCap + 1, Int.MaxValue.toLong).toInt).collect()
-    if (probe.length > localEdgeCap) return run(vertices, edges, maxIter, pointerJump)
-    val labels = runLocal(Seq.empty,
-      probe.toSeq.map(r => (r.getString(0), r.getString(1))))
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val labelsDf = labels.toSeq.toDF("id", "label")
-    vertices.join(broadcast(labelsDf), Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id"))
+    if (!pairs.schema.forall(_.dataType == org.apache.spark.sql.types.StringType))
+      return distributed
+    DriverRows.atMost(pairs, cfg.driverBudget).fold(distributed) { rows =>
+      val labels = runLocal(Seq.empty, rows.toSeq.map(r => (r.getString(0), r.getString(1))))
+      val spark = vertices.sparkSession
+      import spark.implicits._
+      vertices.join(broadcast(labels.toSeq.toDF("id", "label")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id"))
+    }
   }
 
   /**

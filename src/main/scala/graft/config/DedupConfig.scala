@@ -87,7 +87,22 @@ final case class DedupConfig(
     // rounds, +1 shuffle per round) for edge sets that break the bound —
     // hand-chained QA force-links, external edge tables.
     maxCcIterations: Int = 50,
-    ccPointerJump: Boolean = false
+    ccPointerJump: Boolean = false,
+    /** The one size gate between driver and cluster work; every driver cap
+      * derives from it, and 0 keeps every gated step on the cluster:
+      *  - `runAdaptive` collects up to `driverBudget` edges for its
+      *    union-find (~60 B of transient Row boxing each, ~60 MB);
+      *  - the candidates row gate, `LocalCandidates.rowCap`, is the budget
+      *    over the band keys one row holds: 9,803 rows, where 9,702 clean
+      *    Synth rows measured 2.2 s on the driver against 3.1–10.3 s
+      *    distributed (4 vCPU); the twins and the cohort build at most
+      *    `driverBudget` pairs;
+      *  - the salted joins row-broadcast up to 2× the budget in
+      *    non-singleton keys and filter through a broadcast `LongSet` up to
+      *    16×, that far up because losing the filter is a cliff: at 4M
+      *    images a 2.2M key set crossed a shared 2M gate and the candidates
+      *    stage went 10.6× for 4× rows (BENCH/BASELINE.md, round 4f). */
+    driverBudget: Long = 1000000L
 ) {
   require(numHashes % bands == 0, "numHashes must be divisible by bands")
   require(maxHamming <= phashBands - phashAgree,

@@ -88,8 +88,8 @@ object Candidates {
 
   /**
    * All unordered pairs of ids sharing a (band, key) bucket — the LSH
-   * candidate join — with buckets larger than `cap` split into a salted
-   * grid so no reducer sees more than ~2·cap rows.
+   * candidate join — with buckets larger than `cap` (`cfg.bucketSizeCap`)
+   * split into a salted grid so no reducer sees more than ~2·cap rows.
    *
    * Shape: bucket sizes come from a partial-agg `groupBy(band,bkey).count()`
    * — NOT a count window. A `count(*) OVER (PARTITION BY band,bkey)` would
@@ -130,19 +130,18 @@ object Candidates {
    * `sizes`, when given, must hold (band, bkey, m) for AT LEAST every key
    * with m >= 2 (extra keys are harmless — the join is inner on banded).
    * q21 passes its shingle-df aggregate so one pass serves both the
-   * boilerplate cap and the salt assignment. Past `broadcastKeyCap`
+   * boilerplate cap and the salt assignment. Past `broadcastKeys(cfg)`
    * non-singleton keys the tag join is a shuffle-hash join.
    */
-  def saltedSelfJoin(banded: DataFrame, cap: Int,
-      sizes: Option[DataFrame] = None,
-      broadcastKeyCap: Long = BroadcastKeyCap): DataFrame = {
+  def saltedSelfJoin(banded: DataFrame, cfg: DedupConfig,
+      sizes: Option[DataFrame] = None): DataFrame = {
     val (nonSingleton, nsKeys) = nonSingletonKeys(banded, sizes)
-    val bcast = nsKeys <= broadcastKeyCap
+    val bcast = nsKeys <= broadcastKeys(cfg)
     System.err.println(s"[saltedSelfJoin] nonSingleton keys=$nsKeys broadcast=$bcast")
     val tagJoin =
       if (bcast) broadcast(nonSingleton)
       else nonSingleton.hint("shuffle_hash")
-    gridPairs(banded.join(tagJoin, Seq("band", "bkey")), cap)
+    gridPairs(banded.join(tagJoin, Seq("band", "bkey")), cfg.bucketSizeCap)
   }
 
   /**
@@ -150,10 +149,10 @@ object Candidates {
    * where the array position is the band — the shape both image-side
    * generators (MinHash band keys, SimHash combo keys) naturally produce.
    *
-   * Same pair set as `saltedSelfJoin(sketch explode, cap)` (CandidatesSpec
+   * Same pair set as `saltedSelfJoin(sketch explode, cfg)` (CandidatesSpec
    * pins parity), but on the broadcast branch the tag pass never
    * materializes the explosion: the non-singleton keys collect to the
-   * driver (count-gated <= BroadcastKeyCap, ~8B/key), broadcast as an
+   * driver (count-gated <= `filterKeys(cfg)`, ~8B/key), broadcast as an
    * open-addressing `LongSet`, and `FilteredBandKeys` emits only the
    * surviving (band, bkey) rows — measured 64M exploded rows reduced to
    * ~158k at 1M images, removing the second of the two ~14s explode passes
@@ -161,46 +160,39 @@ object Candidates {
    * The size-agg pass still explodes everything (global counts need every
    * key); above the cap the generic shuffle shape applies unchanged.
    */
-  def saltedSelfJoinSketch(sketch: DataFrame, cap: Int,
-      broadcastKeyCap: Long = BroadcastKeyCap,
-      filterKeyCap: Long = FilterKeyCap): DataFrame = {
+  def saltedSelfJoinSketch(sketch: DataFrame, cfg: DedupConfig): DataFrame = {
     val banded = sketch.select(col("id"),
       posexplode(col("bks")).as(Seq("band", "bkey")))
     val (nonSingleton, nsKeys) = nonSingletonKeys(banded, None)
-    // Two independent gates, because their budgets differ by an order of
-    // magnitude. (a) The LongSet GENERATOR FILTER needs only 8B/key of
-    // broadcast payload, so it stays affordable far past the row-broadcast
-    // cap — and losing it is catastrophic, not incremental: the fallback
-    // re-materializes the full band explode (bands x reps rows) AND
-    // shuffles it. Measured at 4M images: the minhash key set (2.2M)
-    // crossed the old single 2M gate and graft:candidates went 10.6x for
-    // 4x rows (620 -> 6,580 run-core-s), dragging 8c scaling efficiency
-    // from 0.744 to 0.545. (b) The m-ATTACH join broadcasts whole rows
-    // (~40B unsafe each); above `broadcastKeyCap` it becomes a shuffle
-    // join — but of the FILTERED survivors (the interesting-collision
-    // rows) against the key set, both tiny next to the explode.
-    // Past `filterKeyCap` (driver-collect budget, ~8B/key + transient Row
-    // boxing) the full shuffle shape is the honest asymptote: at 10^12
-    // rows the non-singleton set scales with the corpus and no driver
-    // holds it; band width is the build parameter that keeps it sane.
+    // Two tiers of one budget. (a) The LongSet GENERATOR FILTER needs only
+    // 8B/key of broadcast payload, so it stays affordable far past the
+    // row-broadcast tier — and losing it is catastrophic, not incremental:
+    // the fallback re-materializes the full band explode (bands x reps
+    // rows) AND shuffles it (the 4M-image cliff, `DedupConfig.driverBudget`).
+    // (b) The m-ATTACH join broadcasts whole rows (~40B unsafe each); above
+    // `broadcastKeys` it becomes a shuffle join — but of the FILTERED
+    // survivors against the key set, both tiny next to the explode. Past
+    // `filterKeys` the full shuffle shape is the honest asymptote: at 10^12
+    // rows the non-singleton set scales with the corpus and no driver holds
+    // it; band width is the build parameter that keeps it sane.
     System.err.println(s"[saltedSelfJoin] nonSingleton keys=$nsKeys " +
-      s"filter=${nsKeys <= filterKeyCap} broadcast=${nsKeys <= broadcastKeyCap}")
+      s"filter=${nsKeys <= filterKeys(cfg)} broadcast=${nsKeys <= broadcastKeys(cfg)}")
     val tagged =
-      if (nsKeys > filterKeyCap)
+      if (nsKeys > filterKeys(cfg))
         banded.join(nonSingleton.hint("shuffle_hash"), Seq("band", "bkey"))
       else {
         val mixed = nonSingleton.select(col("band"), col("bkey")).collect()
           .map(r => FilteredBandKeys.mix(r.getInt(0), r.getLong(1)))
         val bset = sketch.sparkSession.sparkContext
           .broadcast(graft.util.LongSet(mixed))
-        val mAttach = if (nsKeys <= broadcastKeyCap) broadcast(nonSingleton)
+        val mAttach = if (nsKeys <= broadcastKeys(cfg)) broadcast(nonSingleton)
                       else nonSingleton.hint("shuffle_hash")
         // inner join on the REAL key columns drops mix-collision false
         // positives and attaches m
         sketch.select(col("id"), FilteredBandKeys.col(col("bks"), bset))
           .join(mAttach, Seq("band", "bkey"))
       }
-    gridPairs(tagged, cap)
+    gridPairs(tagged, cfg.bucketSizeCap)
   }
 
   /** Non-singleton (band, bkey, m) keys of `banded`, persisted, plus their
@@ -273,19 +265,15 @@ object Candidates {
       .select(CellPairs.col(col("ls"), col("rs"), col("si") === col("sj")))
   }
 
-  /** Max non-singleton key count the salted joins will ROW-broadcast for
-    * the tag / m-attach join (~40B/row unsafe → ~80MB). A caller's 0 forces
-    * the shuffle shape (CandidatesSpec runs both). */
-  val BroadcastKeyCap: Long = 2000000L
+  /** Max non-singleton key count the salted joins ROW-broadcast for the
+    * tag / m-attach join: 2 × `cfg.driverBudget` (~40B/row unsafe → ~80MB
+    * at the default). */
+  def broadcastKeys(cfg: DedupConfig): Long = 2 * cfg.driverBudget
 
-  /** Max non-singleton key count for the LongSet generator-filter pushdown
-    * (8B/key in the broadcast set; the driver collect's transient Row boxing
-    * is the practical bound). Deliberately far above `BroadcastKeyCap`:
-    * losing the filter costs a full re-explode + shuffle of the banded
-    * table, which measured as a 10.6x blowup of the candidate stage the
-    * first time the key count crossed the old shared 2M gate (4M images,
-    * BENCH/BASELINE.md round-4 4M section). */
-  val FilterKeyCap: Long = 16000000L
+  /** Max non-singleton key count for the LongSet generator-filter pushdown:
+    * 16 × `cfg.driverBudget` (8B/key in the broadcast set; the driver
+    * collect's transient Row boxing is the practical bound). */
+  def filterKeys(cfg: DedupConfig): Long = 16 * cfg.driverBudget
 
   /** MinHash band-key projection of the reps: (id, band, bkey) — the LSH
     * index. Persisted as the `banded` stage so an incremental batch joins
@@ -314,7 +302,7 @@ object Candidates {
   def minhashPairs(reps: DataFrame, cfg: DedupConfig): DataFrame =
     // no distinct here: the verifier's groupBy(src,dst) dedups all
     // generators at once — a per-generator distinct is a wasted shuffle
-    saltedSelfJoinSketch(minhashSketch(reps, cfg), cfg.bucketSizeCap)
+    saltedSelfJoinSketch(minhashSketch(reps, cfg), cfg)
       .withColumn("source", lit("minhash"))
 
   /** Per-phash representative map: (image_id, phash, prep). Persisted-free
@@ -355,7 +343,7 @@ object Candidates {
       distinctPh.select(col("id"),
         SimHash.comboKeysNativeCol(col("phash"), cfg.phashBands, cfg.phashAgree)
           .as("bks")),
-      cfg.bucketSizeCap)
+      cfg)
 
     samePhash.union(bandPairs).withColumn("source", lit("simhash"))
   }

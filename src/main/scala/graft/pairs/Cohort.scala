@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-import graft.cluster.ConnectedComponents
 import graft.config.DedupConfig
 import graft.sig.SuffixDup
+import graft.util.DriverRows
 
 /**
  * Candidate generation for a batch checked against the index of prior rows
@@ -29,11 +29,11 @@ import graft.sig.SuffixDup
  *  - the lookups the batch bounds (one old rep per exact key, one per norm,
  *    the old min id per touched phash) are not gated;
  *  - the unbounded fetches (bucket mates, suffix matches, caption members)
- *    come back through `limit(budget + 1)`, and the pairs they make are
- *    counted before any is built. When a fetch or the pair count passes
- *    `budget`, the pairs come from `Dedup.candidatesPlaced` over the prior
- *    clean rows ∪ the batch, kept to the pairs that touch the batch
- *    (`pairsTouching`).
+ *    come back through `DriverRows.atMost(cfg.driverBudget)`, and the
+ *    pairs they make are counted before any is built. When a fetch or the
+ *    pair count passes the budget, the pairs come from
+ *    `Dedup.candidatesPlaced` over the prior clean rows ∪ the batch, kept
+ *    to the pairs that touch the batch (`pairsTouching`).
  * Only pairs with a batch member are ever built.
  */
 object Cohort {
@@ -100,9 +100,9 @@ object Cohort {
   private[graft] def keyFiltered(scan: DataFrame, c: String, keys: Seq[Any]): DataFrame =
     if (keys.isEmpty) scan.where(lit(false))
     else if (keys.sizeIs <= InSetKeyCap) scan.where(col(c).isin(keys: _*))
-    else scan.join(broadcast(scan.sparkSession.createDataFrame(
-      java.util.Arrays.asList(keys.map(Row(_)): _*), StructType(Seq(scan.schema(c))))),
-      Seq(c), "left_semi").select(scan.columns.toIndexedSeq.map(col): _*)
+    else scan.join(broadcast(DriverRows.frame(scan.sparkSession, keys.map(Row(_)),
+      StructType(Seq(scan.schema(c))))), Seq(c), "left_semi")
+      .select(scan.columns.toIndexedSeq.map(col): _*)
 
   /** Keep only pairs that touch at least one id from `ids` (broadcast).
     * The final select restores the pairs' COLUMN ORDER: a USING-join moves
@@ -130,25 +130,22 @@ object Cohort {
   /**
    * Candidates of `batch` (a local frame holding `LocalCandidates.KeyCols`)
    * against `idx`. Cohort fetches carry the job description
-   * `jobLabel + <fetch>`. `budget` bounds the gated fetches' rows and the
-   * pair count; past it the distributed fallback builds the pairs.
+   * `jobLabel + <fetch>`. `cfg.driverBudget` bounds the gated fetches' rows
+   * and the pair count; past it the distributed fallback builds the pairs.
    */
   def run(spark: SparkSession, idx: Index, batch: DataFrame, cfg: DedupConfig,
-      jobLabel: String, budget: Long = ConnectedComponents.LocalEdgeCap): Result = {
+      jobLabel: String): Result = {
     import spark.implicits._
     implicit val ec: ExecutionContext = pool
     val sc = spark.sparkContext
-    def fetch(label: String)(df: DataFrame): Array[Row] = {
+    def described[A](label: String)(f: => A): A = {
       val prev = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(jobLabel + label)
-      try df.collect() finally sc.setJobDescription(prev)
+      try f finally sc.setJobDescription(prev)
     }
-    // one job: a single partition under the limit, whose task stops after
-    // budget + 1 rows (over many partitions a limit collects in rounds)
-    def gated(label: String)(df: DataFrame): Option[Array[Row]] = {
-      val rows = fetch(label)(df.coalesce(1).limit(math.min(budget + 1, Int.MaxValue.toLong).toInt))
-      if (rows.length > budget) None else Some(rows)
-    }
+    def fetch(label: String)(df: DataFrame): Array[Row] = described(label)(df.collect())
+    def gated(label: String)(df: DataFrame): Option[Array[Row]] =
+      described(label)(DriverRows.atMost(df, cfg.driverBudget))
     // index rows sharing a (band, bkey) bucket with `fresh`, grouped with it
     def bucketsWith(label: String, index: DataFrame, fresh: Seq[(String, Int, Long)]) = {
       val keys = fresh.map(r => (r._2, r._3)).toSet
@@ -263,14 +260,13 @@ object Cohort {
     val (normMap, suffixKeys, subPairs) = Await.result(fSub, 60.minutes)
     val gens = Seq(exactPairs, simPairs, subPairs)
     val local =
-      if (gens.forall(_.isDefined) && gens.flatten.map(_.n).sum <= budget)
+      if (gens.forall(_.isDefined) && gens.flatten.map(_.n).sum <= cfg.driverBudget)
         Some(spark.createDataset(gens.flatten.flatMap(_.build())).toDF())
       else None
     val (candidates, placement) = local.map((_, "local")).getOrElse {
       val keys = LocalCandidates.KeyCols.map(col)
       val (all, _) = graft.Dedup.candidatesPlaced(
-        idx.oldClean.select(keys: _*).unionByName(batch.select(keys: _*)), cfg,
-        Some(LocalCandidates.rowCap(cfg, budget)))
+        idx.oldClean.select(keys: _*).unionByName(batch.select(keys: _*)), cfg)
       (pairsTouching(all, ids.toDF("id")), "distributed")
     }
     Result(candidates, placement, repMap, normMap, banded, bandedSim, suffixKeys)

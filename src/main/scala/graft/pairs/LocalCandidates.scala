@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.Row
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.cluster.ConnectedComponents
 import graft.config.DedupConfig
 import graft.sig.{MinHash, SimHash, SuffixDup}
 
@@ -15,7 +14,7 @@ final case class Candidate(src: String, dst: String, source: String)
 
 /**
  * Driver-side twins of the candidate generators, shared by the pipeline's
- * candidates stage (when the clean batch fits the driver budget) and the
+ * candidates stage (when the clean batch fits `cfg.driverBudget`) and the
  * batch-local derivations of `Cohort`, which append and probe run.
  *
  * A small batch's candidates are a job-count floor, not data: the
@@ -219,16 +218,15 @@ object LocalCandidates {
   /** The clean batch's key columns, in the order `candidates` reads them. */
   val KeyCols: Seq[String] = Seq("image_id", "norm", "w", "h", "fmt", "phash", "shingles")
 
-  /** Row bound of the driver path: the driver budget (by default
-    * `ConnectedComponents.LocalEdgeCap`) over the band keys one row holds
-    * — `bands` minhash keys plus C(phashBands, phashAgree) combo keys,
-    * 9,803 rows at the defaults. Measured on 4 vCPUs (collect, twins and
-    * write of the stage, two rounds): 9,702 clean Synth rows with the hot
-    * caption took 2.2 s on the driver against 3.1–10.3 s distributed; 988k
-    * pairs from 249 rows took 5.2–5.4 s against 3.6–6.3 s, with a sampled
-    * heap peak under 1.2 GB. */
-  def rowCap(cfg: DedupConfig, budget: Long = ConnectedComponents.LocalEdgeCap): Long =
-    budget /
+  /** Row bound of the driver path: `cfg.driverBudget` over the band keys
+    * one row holds — `bands` minhash keys plus C(phashBands, phashAgree)
+    * combo keys, 9,803 rows at the defaults. Measured on 4 vCPUs (collect,
+    * twins and write of the stage, two rounds): 9,702 clean Synth rows with
+    * the hot caption took 2.2 s on the driver against 3.1–10.3 s
+    * distributed; 988k pairs from 249 rows took 5.2–5.4 s against
+    * 3.6–6.3 s, with a sampled heap peak under 1.2 GB. */
+  def rowCap(cfg: DedupConfig): Long =
+    cfg.driverBudget /
       (cfg.bands + SimHash.subsets(cfg.phashBands, cfg.phashAgree).size)
 
   /**
@@ -237,8 +235,8 @@ object LocalCandidates {
    * pairs over distinct phashes (a null phash gets neither), and suffix
    * probe/build, containment check and member expansion over distinct
    * norms. Same (src, dst, source) multiset as the distributed form. None
-   * when the pairs would pass the driver budget (`LocalEdgeCap`): the
-   * bucket and expansion sizes are counted before any pair is built.
+   * when the pairs would pass `cfg.driverBudget`: the bucket and expansion
+   * sizes are counted before any pair is built.
    */
   def candidates(rows: Seq[Row], cfg: DedupConfig): Option[Seq[Candidate]] = {
     def id(r: Row) = r.getString(0)
@@ -264,7 +262,7 @@ object LocalCandidates {
     val pairs = exact.size.toLong + samePhash.size + pairCount(mhBuckets) +
       pairCount(simBuckets) +
       relations.iterator.map { case (s, d) => membersOf(s).size.toLong + membersOf(d).size }.sum
-    if (pairs > ConnectedComponents.LocalEdgeCap) None
+    if (pairs > cfg.driverBudget) None
     else Some(
       exact.map { case (s, d) => Candidate(s, d, "exact") } ++
         pairsOf(mhBuckets).map { case (s, d) => Candidate(s, d, "minhash") } ++

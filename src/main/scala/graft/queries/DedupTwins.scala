@@ -118,7 +118,7 @@ object DedupTwins {
     Candidates.saltedSelfJoinSketch(
       s32.select(col("doc_id").as("id"),
         SimHash.comboKeysNativeCol(col("sh"), 8, 4, 32).as("bks")),
-      DedupConfig.default.bucketSizeCap)
+      DedupConfig.default)
       .distinct()
       .join(s32.select(col("doc_id").as("src"), col("sh").as("sha")), "src")
       .join(s32.select(col("doc_id").as("dst"), col("sh").as("shb")), "dst")

@@ -180,7 +180,8 @@ object Documents {
     // `banded`, so their size rows simply never match the inner join)
     val dfSizes = dfAgg
       .select(lit(0).as("band"), col("h").as("bkey"), col("df").as("m"))
-    val shared = graft.pairs.Candidates.saltedSelfJoin(banded, 64, Some(dfSizes))
+    val shared = graft.pairs.Candidates.saltedSelfJoin(banded,
+      graft.config.DedupConfig.default, Some(dfSizes))
       .groupBy(col("src").as("da"), col("dst").as("db"))
       .agg(count(lit(1)).as("shared"))
     shared

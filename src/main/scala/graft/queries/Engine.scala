@@ -62,7 +62,7 @@ object Engine {
         cfg.bands, cfg.hashSeed).as("bks")))
     // ONE distinct, after the numeric re-order — a distinct before the
     // projection would be a second, redundant shuffle of the same pairs
-    Candidates.saltedSelfJoinSketch(sketch, cfg.bucketSizeCap)
+    Candidates.saltedSelfJoinSketch(sketch, cfg)
       .select(least(col("src").cast("long"), col("dst").cast("long")).as("da"),
         greatest(col("src").cast("long"), col("dst").cast("long")).as("db"))
       .distinct()
@@ -84,7 +84,7 @@ object Engine {
     val pairs = Candidates.saltedSelfJoinSketch(
       sh.select(col("id"),
         SimHash.comboKeysNativeCol(col("sh"), cfg.phashBands, cfg.phashAgree).as("bks")),
-      cfg.bucketSizeCap).distinct()
+      cfg).distinct()
     pairs
       .join(sh.select(col("id").as("src"), col("sh").as("sha")), "src")
       .join(sh.select(col("id").as("dst"), col("sh").as("shb")), "dst")
@@ -140,7 +140,7 @@ object Engine {
     // are the CPU hot path; the salted join reads the band table twice)
     val sketch = graft.util.Caches.persist(e.select(col("vec_id").as("id"),
       array((0 until tables).map(bits): _*).as("bks")))
-    val pairs = Candidates.saltedSelfJoinSketch(sketch, cfg.bucketSizeCap).distinct()
+    val pairs = Candidates.saltedSelfJoinSketch(sketch, cfg).distinct()
     // score each UNORDERED pair once, then emit both orientations: cosine
     // is symmetric and the element-wise product/sum order is identical
     // either way (bit-identical values), so the former orientation-doubled
@@ -443,7 +443,7 @@ object Engine {
     val pairs = Candidates.saltedSelfJoinSketch(
       feat.select(col("id"),
         SimHash.comboKeysNativeCol(col("fp"), cfg.phashBands, cfg.phashAgree).as("bks")),
-      cfg.bucketSizeCap).distinct()
+      cfg).distinct()
     pairs
       .join(feat.select(col("id").as("src"), col("fp").as("fa")), "src")
       .join(feat.select(col("id").as("dst"), col("fp").as("fb")), "dst")

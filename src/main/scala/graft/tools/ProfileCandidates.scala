@@ -190,14 +190,14 @@ object ProfileCandidates {
         posexplode(SimHash.comboKeysCol(col("phash"), cfg.phashBands, cfg.phashAgree))
           .as(Seq("band", "bkey")))
       time("ph-explode") { banded.count() }
-      time("ph-salted") { Candidates.saltedSelfJoin(banded, cfg.bucketSizeCap).count() }
-      time("ph-salted2") { Candidates.saltedSelfJoin(banded, cfg.bucketSizeCap).count() }
+      time("ph-salted") { Candidates.saltedSelfJoin(banded, cfg).count() }
+      time("ph-salted2") { Candidates.saltedSelfJoin(banded, cfg).count() }
       val sketch = distinctPh.cache().select(col("id"),
         SimHash.comboKeysNativeCol(col("phash"), cfg.phashBands, cfg.phashAgree)
           .as("bks"))
-      time("ph-sketch") { Candidates.saltedSelfJoinSketch(sketch, cfg.bucketSizeCap).count() }
+      time("ph-sketch") { Candidates.saltedSelfJoinSketch(sketch, cfg).count() }
       val timer = StageTimer.attach(spark)
-      time("ph-sketch2") { Candidates.saltedSelfJoinSketch(sketch, cfg.bucketSizeCap).count() }
+      time("ph-sketch2") { Candidates.saltedSelfJoinSketch(sketch, cfg).count() }
       timer.report(8)
       spark.stop(); return
     }
@@ -229,7 +229,7 @@ object ProfileCandidates {
         col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
           col("l.id") < col("r.id")).count()
     }
-    time("salted-join") { Candidates.saltedSelfJoin(bandedC, cfg.bucketSizeCap).count() }
+    time("salted-join") { Candidates.saltedSelfJoin(bandedC, cfg).count() }
     time("minhash-full") { Candidates.minhashPairs(reps, cfg).count() }
     time("simhash-full") { Candidates.simhashPairs(clean, cfg).count() }
     time("substr-full") { Candidates.substringPairs(clean, cfg).count() }

@@ -41,7 +41,7 @@ class CachesSpec extends AnyFunSuite {
     // the driver-side cohort persists nothing; with no budget the cohort
     // falls back to the distributed generators, which persist
     Caches.scoped("x") {
-      Incremental.append(spark, root, ids(330, 360), "2", DedupConfig.default, cohortBudget = 0L)
+      Incremental.append(spark, root, ids(330, 360), "2", DedupConfig.default.copy(driverBudget = 0))
     }
     val scoped = ofRoot(Caches.registered("x"))
     assert(scoped.nonEmpty, "the scoped append's chain persists are not under \"x\"")

@@ -26,8 +26,9 @@ class CandidatesSpec extends AnyFunSuite {
       .as[(String, String)].collect().toSet
 
     // both tag-join branches: broadcast, and shuffle-hash past the key cap
-    for (bcastCap <- Seq(Candidates.BroadcastKeyCap, 0L)) {
-      val salted = Candidates.saltedSelfJoin(banded, cap, broadcastKeyCap = bcastCap)
+    for (budget <- Seq(DedupConfig.default.driverBudget, 0L)) {
+      val cfg = DedupConfig.default.copy(bucketSizeCap = cap, driverBudget = budget)
+      val salted = Candidates.saltedSelfJoin(banded, cfg)
         .as[(String, String)].collect()
 
       assert(salted.length == salted.toSet.size, "no duplicate pairs")
@@ -76,13 +77,24 @@ class CandidatesSpec extends AnyFunSuite {
       .as[(String, String)].collect().toSet
     assert(naive.size > 1000, "hot band must generate real pair volume")
 
-    val bcast = Candidates.saltedSelfJoinSketch(sketch, cap)
+    // the derived defaults: 9,803 rows, 2M broadcast keys, 16M filter keys
+    val default = DedupConfig.default
+    assert(graft.pairs.LocalCandidates.rowCap(default) == 9803L &&
+      Candidates.broadcastKeys(default) == 2000000L && Candidates.filterKeys(default) == 16000000L)
+    // one budget per tier: the fixture's n non-singleton keys fall in each
+    val n = banded.groupBy("band", "bkey").count().where(col("count") >= 2).count()
+    val mid = (n + 15) / 16
+    val (cfgA, cfgB, cfgC) = (default.copy(bucketSizeCap = cap),
+      default.copy(bucketSizeCap = cap, driverBudget = mid),
+      default.copy(bucketSizeCap = cap, driverBudget = 0L))
+    assert(n <= Candidates.broadcastKeys(cfgA), s"tier a: $n keys")
+    assert(Candidates.broadcastKeys(cfgB) < n && n <= Candidates.filterKeys(cfgB), s"tier b: $n keys")
+    assert(n > Candidates.filterKeys(cfgC), s"tier c: $n keys")
+    val bcast = Candidates.saltedSelfJoinSketch(sketch, cfgA)
       .as[(String, String)].collect().toSet
-    val filterShuffleM = Candidates.saltedSelfJoinSketch(sketch, cap,
-        broadcastKeyCap = 0)
+    val filterShuffleM = Candidates.saltedSelfJoinSketch(sketch, cfgB)
       .as[(String, String)].collect().toSet
-    val shuffle = Candidates.saltedSelfJoinSketch(sketch, cap,
-        broadcastKeyCap = 0, filterKeyCap = 0)
+    val shuffle = Candidates.saltedSelfJoinSketch(sketch, cfgC)
       .as[(String, String)].collect().toSet
     assert(bcast == naive)
     assert(filterShuffleM == naive)
@@ -105,9 +117,10 @@ class CandidatesSpec extends AnyFunSuite {
   test("salted self-join is stable under partitioning") {
     import spark.implicits._
     val rows = (0 until 100).map(i => (f"x$i%03d", i % 3, (i % 5).toLong))
-    val a = Candidates.saltedSelfJoin(rows.toDF("id", "band", "bkey").repartition(2), 4)
+    val cfg = DedupConfig.default.copy(bucketSizeCap = 4)
+    val a = Candidates.saltedSelfJoin(rows.toDF("id", "band", "bkey").repartition(2), cfg)
       .as[(String, String)].collect().toSet
-    val b = Candidates.saltedSelfJoin(rows.toDF("id", "band", "bkey").repartition(7), 4)
+    val b = Candidates.saltedSelfJoin(rows.toDF("id", "band", "bkey").repartition(7), cfg)
       .as[(String, String)].collect().toSet
     assert(a == b)
   }
@@ -256,7 +269,11 @@ class CandidatesSpec extends AnyFunSuite {
     val checks = corpora.map { case (name, rows) => scala.concurrent.Future {
       val c = clean(rows)
       val (local, placedL) = Dedup.candidatesPlaced(c, cfg)
-      val (dist, placedD) = Dedup.candidatesPlaced(c, cfg, localRowCap = Some(0L))
+      // a budget one row under the batch: the row gate sends it to the
+      // distributed generators, and their salted joins keep the default
+      // tiers (every key set is under 2 × the budget)
+      val (dist, placedD) = Dedup.candidatesPlaced(c, cfg.copy(driverBudget = (c.count() - 1) *
+        (cfg.bands + graft.sig.SimHash.subsets(cfg.phashBands, cfg.phashAgree).size)))
       assert(placedL == "local" && placedD == "distributed", name)
       val (l, d) = (multiset(local), multiset(dist))
       assert(l.map(_._3).distinct.size >= 3, s"$name: too few generators fire: ${l.groupBy(_._3).keys}")
@@ -271,7 +288,7 @@ class CandidatesSpec extends AnyFunSuite {
     val cfg = DedupConfig.default
     // 260 rows under the row gate: one caption at 260 sizes, so 260 exact
     // groups whose reps share all minhash bands, 32 * C(260, 2) = 1,076,640
-    // bucket pairs > LocalEdgeCap; the twins count them and build none
+    // bucket pairs > driverBudget; the twins count them and build none
     val cap = "a photo of the quick brown fox jumping over the lazy dog at dawn"
     val rows = (0 until 260).map(i =>
       (f"w-$i%04d", cap, 64 + i, 48, "png", java.lang.Long.valueOf(i.toLong * 0x9E3779B97F4A7C15L)))
@@ -283,6 +300,24 @@ class CandidatesSpec extends AnyFunSuite {
     // multiset is the distributed one (planned here, not run)
     val (_, placed) = Dedup.candidatesPlaced(c, cfg)
     assert(placed == "distributed")
+  }
+
+  test("the twins' pair gate reads the caller's budget, not the default one") {
+    val cfg = DedupConfig.default
+    // a budget of 10,200 is a row cap of 100; one caption at 100 sizes gives
+    // 32 * C(100, 2) = 158,400 bucket pairs, over that budget and under the
+    // default one
+    val small = cfg.copy(driverBudget = 10200L)
+    assert(graft.pairs.LocalCandidates.rowCap(small) == 100L)
+    val cap = "a photo of the quick brown fox jumping over the lazy dog at dawn"
+    val c = clean((0 until 100).map(i =>
+      (f"w-$i%04d", cap, 64 + i, 48, "png", java.lang.Long.valueOf(i.toLong * 0x9E3779B97F4A7C15L))))
+    val (local, placedL) = Dedup.candidatesPlaced(c, cfg)
+    val (dist, placedD) = Dedup.candidatesPlaced(c, small)
+    assert(placedL == "local" && placedD == "distributed")
+    val (l, d) = (multiset(local), multiset(dist))
+    assert(l.count(_._3 == "minhash") == 158400)
+    assert(l == d, s"local-only=${l.diff(d).take(5)} distributed-only=${d.diff(l).take(5)}")
   }
 
   test("driver-local candidates order ids as Spark does (code points, not UTF-16 units)") {

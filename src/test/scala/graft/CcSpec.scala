@@ -47,7 +47,8 @@ class CcSpec extends AnyFunSuite with ParallelTestExecution {
     val (vertices, edges, ids) = chain(12)
     def labels(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val gated = labels(ConnectedComponents.runAdaptive(vertices, edges))
+    val cfg = graft.config.DedupConfig.default
+    val gated = labels(ConnectedComponents.runAdaptive(vertices, edges, cfg))
     assert(ids.forall(gated(_) == "v-0000"))
     // the chain's 11 edges exceed a cap of 5 (distributed fallback); cap 0
     // disables the driver path outright — both must label exactly as run
@@ -55,10 +56,10 @@ class CcSpec extends AnyFunSuite with ParallelTestExecution {
     assert(gated == plain)
     for (cap <- Seq(5L, 0L))
       assert(labels(ConnectedComponents.runAdaptive(vertices, edges,
-        localEdgeCap = cap)) == plain, s"cap $cap")
+        cfg.copy(driverBudget = cap))) == plain, s"cap $cap")
     // singletons (vertices absent from edges) keep their own id
     val extra = (ids :+ "v-9999").toDF("id")
-    val withSingleton = ConnectedComponents.runAdaptive(extra, edges)
+    val withSingleton = ConnectedComponents.runAdaptive(extra, edges, cfg)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(withSingleton("v-9999") == "v-9999")
   }
@@ -101,7 +102,8 @@ class CcSpec extends AnyFunSuite with ParallelTestExecution {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(distributed("😀-b") == "Ａ-a" && distributed("😀😀") == "😀-d")
     assert(ConnectedComponents.runLocal(ids, edgeSeq) == distributed)
-    val adaptive = ConnectedComponents.runAdaptive(ids.toDF("id"), edgeSeq.toDF("src", "dst"))
+    val adaptive = ConnectedComponents.runAdaptive(ids.toDF("id"), edgeSeq.toDF("src", "dst"),
+      graft.config.DedupConfig.default)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(adaptive == distributed)
   }

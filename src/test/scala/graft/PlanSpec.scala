@@ -70,7 +70,8 @@ class PlanSpec extends AnyFunSuite {
     // this test exists to pin
     val banded = (0 until 1000).map(i => (f"id$i%04d", i % 3, (i % 7).toLong))
       .toDF("id", "band", "bkey").repartition(4)
-    val p = plan(Candidates.saltedSelfJoin(banded, 8))
+    val cap8 = DedupConfig.default.copy(bucketSizeCap = 8)
+    val p = plan(Candidates.saltedSelfJoin(banded, cap8))
     assert(!p.contains("Window"), s"no window in the salted join:\n${p.take(1200)}")
     assert(p.contains(">= 2"), s"singleton buckets must be filtered pre-grid:\n${p.take(1200)}")
 
@@ -80,10 +81,10 @@ class PlanSpec extends AnyFunSuite {
     // a LocalRelation cohort yields the same pair multiset
     val local = spark.createDataFrame(
       java.util.Arrays.asList(banded.collect(): _*), banded.schema)
-    val localPairs = Candidates.saltedSelfJoin(local, 8)
+    val localPairs = Candidates.saltedSelfJoin(local, cap8)
       .select("src", "dst").collect().map(r => (r.getString(0), r.getString(1)))
       .sorted.toSeq
-    val distPairs = Candidates.saltedSelfJoin(banded, 8)
+    val distPairs = Candidates.saltedSelfJoin(banded, cap8)
       .select("src", "dst").collect().map(r => (r.getString(0), r.getString(1)))
       .sorted.toSeq
     assert(localPairs == distPairs,

@@ -67,8 +67,8 @@ class ProbeSpec extends AnyFunSuite with ParallelTestExecution {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     // the cohort with no driver budget falls back to the distributed
     // generators; the answer is the same
-    val probedFallback = rows(Probe.run(spark, root, batch, DedupConfig.default,
-      cohortBudget = 0L).decisions)
+    val probedFallback = rows(Probe.run(spark, root, batch,
+      DedupConfig.default.copy(driverBudget = 0)).decisions)
     assert(snapshot(root) == before, "probe mutated the root")
 
     // within-batch duplicate: p2's best match is p1, and it blocks

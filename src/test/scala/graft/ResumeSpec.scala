@@ -74,8 +74,8 @@ class ResumeSpec extends AnyFunSuite with ParallelTestExecution {
     // the cohort with no driver budget: its pairs come from the distributed
     // generators over the prior rows and the batch
     Dedup.runCheckpointed(spark, old, rootFallback, DedupConfig.default)
-    val fallback = Incremental.append(spark, rootFallback, neu, "1", DedupConfig.default,
-      cohortBudget = 0L)
+    val fallback = Incremental.append(spark, rootFallback, neu, "1",
+      DedupConfig.default.copy(driverBudget = 0))
 
     def pairSet(r: DedupResult) = r.verified
       .select(col("src"), col("dst"), round(col("hybrid"), 6), col("is_edge"),
